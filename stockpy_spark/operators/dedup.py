@@ -463,8 +463,7 @@ def minhash_dedup_assign(
     pass the bound so the band-signature key frame pins as a
     driver-literal LocalRelation (pinning.pin_literal) instead of a
     checkpoint — the bucket-min/join-back plan then broadcasts
-    statically with no leaf-scan stages. Falls back to the checkpoint
-    pin if the bound is ever exceeded; default None keeps the
+    statically with no leaf-scan stages. Default None keeps the
     corpus-scale checkpoint path.
 
     This is the 100 TB dedup path. Pair enumeration (minhash_lsh_pairs)

@@ -32,6 +32,7 @@ sort.
 
 from __future__ import annotations
 
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -319,50 +320,29 @@ def dsir_importance_weights(
     # r16 pinned the n_buckets-row census (guide §2.4 — unpinned, the
     # corpus bucket pass replayed once per consumer); r17 upgrades the
     # pin to a driver-literal (pinning.pin_literal_with_rows): the
-    # census is BOUNDED at n_buckets rows, so it embeds as a
-    # LocalRelation, the grand totals fold in as exact-int literals
-    # (integer sums of the same census rows the old 1-row totals
-    # aggregate computed, NULL kept for an empty census), and the
-    # log-ratio broadcast builds driver-side with zero jobs. The
-    # checkpoint fallback keeps the Spark-side totals derivation.
-    stats, _stats_pdf = pin_literal_with_rows(stats, n_buckets)
-    if _stats_pdf is not None:
-        _T = int(_stats_pdf["__ct"].sum()) if len(_stats_pdf) else None
-        _R = int(_stats_pdf["__cr"].sum()) if len(_stats_pdf) else None
-        log_ratio = stats.select(
-            "__b",
-            (
-                F.log(
-                    (F.col("__ct") + 1).cast("double")
-                    / (F.lit(_T).cast("long") + n_buckets).cast("double")
-                )
-                - F.log(
-                    (F.col("__cr") + 1).cast("double")
-                    / (F.lit(_R).cast("long") + n_buckets).cast("double")
-                )
-            ).alias("__ld"),
-        )
-    else:
-        # Grand totals: a keyless 1-row census, broadcast by construction.
-        totals = stats.agg(
-            F.sum("__ct").alias("__T"), F.sum("__cr").alias("__R")
-        )
-        log_ratio = (
-            stats.crossJoin(F.broadcast(totals))
-            .select(
-                "__b",
-                (
-                    F.log(
-                        (F.col("__ct") + 1).cast("double")
-                        / (F.col("__T") + n_buckets).cast("double")
-                    )
-                    - F.log(
-                        (F.col("__cr") + 1).cast("double")
-                        / (F.col("__R") + n_buckets).cast("double")
-                    )
-                ).alias("__ld"),
+    # census is BOUNDED at n_buckets rows (bucket ids are mod
+    # n_buckets), so it embeds as a LocalRelation, the grand totals
+    # fold in as exact-int literals (NULL for an empty census, SQL's
+    # sum semantics), and the log-ratio broadcast builds driver-side
+    # with zero jobs.
+    stats, table = pin_literal_with_rows(stats, n_buckets)
+    if table is None:
+        raise RuntimeError(f"DSIR bucket census exceeded {n_buckets} rows")
+    _T = pc.sum(table["__ct"]).as_py()
+    _R = pc.sum(table["__cr"]).as_py()
+    log_ratio = stats.select(
+        "__b",
+        (
+            F.log(
+                (F.col("__ct") + 1).cast("double")
+                / (F.lit(_T).cast("long") + n_buckets).cast("double")
             )
-        )
+            - F.log(
+                (F.col("__cr") + 1).cast("double")
+                / (F.lit(_R).cast("long") + n_buckets).cast("double")
+            )
+        ).alias("__ld"),
+    )
 
     gumbel = -F.log(-F.log(_hash_uniform(F.col("__id"), salt + "-g")))
     if use_kernel:

@@ -67,11 +67,7 @@ _VALID = ("local", "reliable")
 
 def pin_mode(spark) -> str:
     """Resolve the active pin mode: Spark conf, then env, then local."""
-    mode = None
-    try:
-        mode = spark.conf.get(PIN_MODE_CONF, None)
-    except Exception:
-        mode = None
+    mode = spark.conf.get(PIN_MODE_CONF, None)
     if not mode:
         mode = os.environ.get(PIN_MODE_ENV) or "local"
     mode = mode.strip().lower()
@@ -96,10 +92,9 @@ def pin(df: DataFrame, *, eager: bool = True) -> DataFrame:
 
 
 def pin_literal(df: DataFrame, max_rows: int) -> DataFrame:
-    """Materialize a PROVABLY BOUNDED frame (a ``limit(k)`` derivative
-    or a fixed-size census — the caller asserts the bound, Spark can't
-    see it) as a driver-literal ``LocalRelation`` instead of a
-    checkpoint.
+    """Materialize a frame of at most ``max_rows`` rows as a
+    driver-literal ``LocalRelation`` instead of a checkpoint (see
+    :func:`pin_literal_with_rows`, which this returns the frame of).
 
     Why (guide §1.2/§2.4): a localCheckpoint pin of a KB frame costs
     the same as any pin — a blocking job — but every downstream
@@ -112,41 +107,31 @@ def pin_literal(df: DataFrame, max_rows: int) -> DataFrame:
     and no AQE stage materializations — measured on
     pipeline_data_release as the difference between ~80 scheduled jobs
     and ~40 for identical results. Determinism is the strongest of the
-    pin family: the values are literals in the plan.
-
-    Scale safety: the collect probes ``max_rows + 1`` rows; if the
-    bound assumption ever breaks (or the Arrow literal path is
-    unavailable) this degrades to a plain :func:`pin` — never to a
-    driver OOM or a wrong result."""
+    pin family: the values are literals in the plan."""
     return pin_literal_with_rows(df, max_rows)[0]
 
 
 def pin_literal_with_rows(df: DataFrame, max_rows: int):
-    """:func:`pin_literal`, additionally returning the collected
-    pandas frame so callers can fold its values into literals (e.g. a
-    count census whose grand totals become ``lit`` ints). Returns
-    ``(literal_df, pdf)`` on success, ``(pin(df), None)`` on any
-    fallback — callers must keep a Spark-side derivation for the
-    ``None`` case."""
-    spark = df.sparkSession
-    try:
-        pdf = df.limit(max_rows + 1).toPandas()
-    except Exception:
+    """Collect at most ``max_rows + 1`` rows of ``df`` as an Arrow
+    table and re-embed them as a ``LocalRelation`` with ``df``'s
+    schema. Returns ``(literal_df, table)``, the ``pyarrow.Table``
+    letting callers fold the values into literals (e.g. a count
+    census whose grand totals become ``lit`` ints).
+
+    The Arrow transfer is exact for every Spark type: nullable longs
+    keep all 64 bits (a pandas round-trip would widen them to float64
+    and lose precision above 2^53), and nested arrays/structs keep
+    their element types.
+
+    The measured row count is the only branch: a frame over
+    ``max_rows`` rows returns ``(pin(df), None)``, so a size bound
+    that breaks degrades to a checkpoint pin, never to a driver OOM.
+    Callers whose bound is structural (``mod n``, ``limit(k)``, a
+    global aggregate) may treat ``None`` as a broken invariant."""
+    table = df.limit(max_rows + 1).toArrow()
+    if table.num_rows > max_rows:
         return pin(df), None
-    if len(pdf) > max_rows:
-        return pin(df), None
-    try:
-        out = spark.createDataFrame(pdf, schema=df.schema)
-        # Arrow-path createDataFrame(pandas) plans as LocalRelation;
-        # the list/RDD path plans as LogicalRDD, which has UNKNOWN
-        # size (defaults to huge) and would force sort-merge joins —
-        # worse than the checkpoint pin. Verify, else fall back.
-        plan = out._jdf.queryExecution().optimizedPlan().toString()
-        if "LocalRelation" not in plan:
-            return pin(df), None
-        return out, pdf
-    except Exception:
-        return pin(df), None
+    return df.sparkSession.createDataFrame(table, schema=df.schema), table
 
 
 def pin_lazy(df: DataFrame) -> DataFrame:

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 from itertools import combinations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -867,60 +868,39 @@ def spearman_corr_pairs(
     # are bit-identical by construction: cum-below is an exact int
     # (< 2^53), (c+1)/2.0 is an exact half, and the closing
     # double-add matches the JVM's left-associated (off + lt) + half.
-    # Columns with NaN values or a failed literal path fall back to
-    # the bucketed derivation unchanged.
+    # Columns with NaN values keep the bucketed derivation (NaN sorts
+    # last in Spark but is unordered in Python).
     lit_rank_tables: dict = {}
     small = [
         c for c in cols
         if 0 < censuses.get(c, (None, 0))[1] <= RANK_LITERAL_MAX
     ]
     if small:
-        try:
-            t2 = None
-            for c in small:
-                t = (
-                    combo.groupBy(F.col(c).alias("__v"))
-                    .agg(F.sum("__w").alias("__c"))
-                    .select(F.lit(c).alias("__col"), "__v", "__c")
-                )
-                t2 = t if t2 is None else t2.unionByName(t)
-            cpdf = t2.toPandas()
-            import pandas as pd
-
-            from pyspark.sql.types import (
-                DoubleType,
-                StructField,
-                StructType,
+        t2 = None
+        for c in small:
+            t = (
+                combo.groupBy(F.col(c).alias("__v"))
+                .agg(F.sum("__w").alias("__c"))
+                .select(F.lit(c).alias("__col"), "__v", "__c")
             )
-
-            for c in small:
-                sub = cpdf[cpdf["__col"] == c]
-                vals = [float(v) for v in sub["__v"]]
-                cnts = [int(x) for x in sub["__c"]]
-                if any(v != v for v in vals):  # NaN: Spark-path only
-                    continue
-                order = sorted(range(len(vals)), key=lambda i: vals[i])
-                below = 0
-                vcol, rcol = [], []
-                for i in order:
-                    vcol.append(vals[i])
-                    rcol.append(float(below) + (cnts[i] + 1) / 2.0)
-                    below += cnts[i]
-                lit_df = df.sparkSession.createDataFrame(
-                    pd.DataFrame({c: vcol, f"__r_{c}": rcol}),
-                    schema=StructType(
-                        [
-                            StructField(c, DoubleType()),
-                            StructField(f"__r_{c}", DoubleType()),
-                        ]
-                    ),
-                )
-                if "LocalRelation" in (
-                    lit_df._jdf.queryExecution().optimizedPlan().toString()
-                ):
-                    lit_rank_tables[c] = lit_df
-        except Exception:
-            lit_rank_tables = {}
+            t2 = t if t2 is None else t2.unionByName(t)
+        counts_by_col: dict = {c: [] for c in small}
+        for r in t2.toArrow().to_pylist():
+            counts_by_col[r["__col"]].append((r["__v"], r["__c"]))
+        for c in small:
+            pairs = counts_by_col[c]
+            if any(v != v for v, _ in pairs):  # NaN: Spark-path only
+                continue
+            below = 0
+            vcol, rcol = [], []
+            for v, cnt in sorted(pairs):
+                vcol.append(v)
+                rcol.append(float(below) + (cnt + 1) / 2.0)
+                below += cnt
+            lit_rank_tables[c] = df.sparkSession.createDataFrame(
+                pa.table({c: vcol, f"__r_{c}": rcol}),
+                schema=f"`{c}` double, `__r_{c}` double",
+            )
 
     ranked = combo
     for c in cols:

@@ -8,6 +8,7 @@ hash aggregations, one broadcast join; no UDFs.
 
 from __future__ import annotations
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -640,9 +641,9 @@ def nb_quality_classifier(
     seed join is an unhinted equi-join on the doc id (labels can be
     corpus-sized — AQE broadcasts while they fit, r11 LUT policy); the
     model is ``n_buckets`` rows broadcast back onto the token stream;
-    censuses are 1-row crosses attached AFTER the per-doc aggregate so
-    the instance stream never carries them. No window, no pair join,
-    driver state zero.
+    the census totals inline as literals, so the instance stream never
+    carries them. No window, no pair join; driver state is the
+    ``n_buckets``-row model.
     """
     from stockpy_spark.operators.dsir import _bucket
 
@@ -666,14 +667,12 @@ def nb_quality_classifier(
     # token); joining at DOC level and exploding after moves the same
     # attachment to doc-sized rows, and only labeled docs are
     # tokenized on the training side. The trained cell table is
-    # BOUNDED at n_buckets rows by construction, so it pins as a
-    # driver-literal LocalRelation (pinning.pin_literal_with_rows):
-    # the weight broadcast then builds from plan literals — no
-    # shuffle-stage jobs, no leaf scans — and the token grand totals
-    # fold in as exact-int literals (integer sums of the SAME cell
-    # values the old census aggregated; an empty cell table keeps the
-    # old NULL-total semantics). The checkpoint fallback keeps a
-    # Spark-side census derivation for un-collectable cases.
+    # BOUNDED at n_buckets rows (bucket ids are mod n_buckets), so it
+    # pins as a driver-literal LocalRelation
+    # (pinning.pin_literal_with_rows): the weight broadcast then
+    # builds from plan literals — no shuffle-stage jobs, no leaf
+    # scans — and the token grand totals fold in as exact-int
+    # literals (an empty cell table keeps SQL's NULL-sum semantics).
     labeled = df.select(
         F.col(id_col).alias("__id"), F.col(text_col).alias("__ltxt")
     ).join(lab, "__id")
@@ -695,60 +694,34 @@ def nb_quality_classifier(
             F.sum(F.when(F.col("__y") == 0, 1).otherwise(0)).alias("__n0"),
         )
     )
-    cells, _cells_pdf = pin_literal_with_rows(cells, n_buckets)
-    doc_census = lab.agg(
+    cells, table = pin_literal_with_rows(cells, n_buckets)
+    if table is None:
+        raise RuntimeError(f"NB cell table exceeded {n_buckets} rows")
+    # the doc census is one row by construction (a global agg):
+    # collecting it too makes the ENTIRE model literal — the weight
+    # table derives from a LocalRelation with literal totals (no
+    # census broadcast job), and prior/w0 inline as literals in the
+    # final projection (no 1-row crossJoin). Every double is still
+    # computed by the same JVM expressions.
+    docs = lab.agg(
         F.sum(F.when(F.col("__y") == 1, 1).otherwise(0)).alias("__d1"),
         F.sum(F.when(F.col("__y") == 0, 1).otherwise(0)).alias("__d0"),
-    )
+    ).collect()[0]
+    lits = {
+        "__t1": pc.sum(table["__n1"]).as_py(),
+        "__t0": pc.sum(table["__n0"]).as_py(),
+        "__d1": docs["__d1"],
+        "__d0": docs["__d0"],
+    }
+    cen = {k: F.lit(v).cast("long") for k, v in lits.items()}
     a, b = F.lit(float(alpha)), F.lit(float(n_buckets))
-    lits = None
-    if _cells_pdf is not None:
-        # the doc census is one row by construction (a global agg):
-        # collecting it too makes the ENTIRE model literal — the
-        # weight table derives from a LocalRelation with literal
-        # totals (no census broadcast job), and prior/w0 inline as
-        # literals in the final projection (no 1-row crossJoin). The
-        # values are the SAME longs the old crossJoin carried (pandas
-        # sums of the collected cells are exact integer sums; an
-        # empty frame keeps SQL's NULL-sum semantics), and every
-        # double is still computed by the same JVM expressions.
-        try:
-            _dc = doc_census.toPandas()
-            _dv = lambda c: (
-                None if len(_dc) == 0 or _dc[c].isna().iloc[0]
-                else int(_dc[c].iloc[0])
-            )
-            lits = {
-                "__t1": int(_cells_pdf["__n1"].sum()) if len(_cells_pdf) else None,
-                "__t0": int(_cells_pdf["__n0"].sum()) if len(_cells_pdf) else None,
-                "__d1": _dv("__d1"),
-                "__d0": _dv("__d0"),
-            }
-        except Exception:
-            lits = None
-    if lits is not None:
-        cen = {k: F.lit(v).cast("long") for k, v in lits.items()}
-    else:
-        census = cells.agg(
-            F.sum("__n1").alias("__t1"), F.sum("__n0").alias("__t0")
-        ).crossJoin(doc_census)
-        cen = {k: F.col(k) for k in ("__t1", "__t0", "__d1", "__d0")}
-    if lits is not None:
-        weights = cells.select(
-            "__b",
-            (
-                F.log((F.col("__n1") + a) / (cen["__t1"] + a * b))
-                - F.log((F.col("__n0") + a) / (cen["__t0"] + a * b))
-            ).alias("__w"),
-        )
-    else:
-        weights = cells.crossJoin(F.broadcast(census)).select(
-            "__b",
-            (
-                F.log((F.col("__n1") + a) / (cen["__t1"] + a * b))
-                - F.log((F.col("__n0") + a) / (cen["__t0"] + a * b))
-            ).alias("__w"),
-        )
+    weights = cells.select(
+        "__b",
+        (
+            F.log((F.col("__n1") + a) / (cen["__t1"] + a * b))
+            - F.log((F.col("__n0") + a) / (cen["__t0"] + a * b))
+        ).alias("__w"),
+    )
 
     per_doc = (
         grams.join(F.broadcast(weights), "__b", "left")
@@ -772,11 +745,7 @@ def nb_quality_classifier(
     prior = F.log((cen["__d1"] + a) / (cen["__d0"] + a))
     w0 = F.log(a / (cen["__t1"] + a * b)) - F.log(a / (cen["__t0"] + a * b))
     score = F.round(prior + F.col("__raw") + F.col("__miss") * w0, dp)
-    scored_src = (
-        per_doc if lits is not None
-        else per_doc.crossJoin(F.broadcast(census))
-    )
-    return scored_src.select(
+    return per_doc.select(
         F.col("__id").alias(id_col),
         F.col("__nt").cast("bigint").alias("n_tokens"),
         score.alias("nb_score"),

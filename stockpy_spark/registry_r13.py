@@ -188,7 +188,7 @@ def release_stage_frames(spark: SparkSession, sf_dir: str) -> dict:
     # pin as driver-literal LocalRelations (pin_literal docstring —
     # joins against them plan as static broadcasts with zero build
     # jobs / scan stages, vs the checkpoint pins' sort-merge + leaf
-    # scans). Falls back to the checkpoint pin if the bound breaks.
+    # scans).
     admitted6 = (
         nb.orderBy(F.desc("nb_score"), F.asc("doc_id"))
         .limit(128)

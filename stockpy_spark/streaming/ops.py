@@ -19,7 +19,11 @@ from pyspark.errors import AnalysisException
 from stockpy_spark.operators.pinning import pin
 
 
+import threading
 from contextlib import contextmanager
+
+# serializes fresh_stream_width's set/restore of the session conf
+_WIDTH_LOCK = threading.Lock()
 
 
 @contextmanager
@@ -40,14 +44,21 @@ def fresh_stream_width(spark: SparkSession, width: int | None = None):
     local-mode constant; callers whose state key cardinality warrants
     more width pass it explicitly. Resumed checkpoints are unaffected
     by construction, and the previous session value is restored on
-    exit (the started query keeps the width it captured)."""
+    exit (the started query keeps the width it captured).
+
+    Thread safety: the conf is session-global, so a module-level lock
+    serializes the set/restore — concurrent stream starts queue up and
+    each restore puts back the value its own window found. The lock is
+    not reentrant: do not nest the context. Batch plans built on OTHER
+    threads while a window is open still see the clamped width."""
     w = int(width or spark.sparkContext.defaultParallelism)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(w))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    with _WIDTH_LOCK:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(w))
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def windowed_agg(

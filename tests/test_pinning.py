@@ -2,7 +2,8 @@
 byte-identical to the pre-r13 direct localCheckpoint call sites, and
 reliable mode must produce the same values through a durable
 checkpoint() once a checkpoint dir is set (the r12 judge's
-cluster-durability finding)."""
+cluster-durability finding). pin_literal_with_rows must round-trip
+values exactly as a LocalRelation and pin frames over its bound."""
 
 from __future__ import annotations
 
@@ -16,8 +17,23 @@ from stockpy_spark.operators.pinning import (
     PIN_MODE_CONF,
     pin,
     pin_lazy,
+    pin_literal,
+    pin_literal_with_rows,
     pin_mode,
 )
+
+_BIG = 2**53 + 1  # the first long a float64 cannot hold
+
+
+def _typed_frame(spark):
+    return spark.createDataFrame(
+        [(_BIG, "a", [1.5, None]), (None, None, None), (-_BIG, "", [])],
+        "n bigint, s string, a array<double>",
+    )
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_default_mode_is_local(spark):
@@ -127,3 +143,31 @@ def test_pin_counts_gate_restores_lazy_contract(spark):
     a = {(r.doc, r.perplexity) for r in lazy_plan.collect()}
     b = {(r.doc, r.perplexity) for r in pinned.collect()}
     assert a == b
+
+
+def test_literal_pin_round_trips_exactly(spark):
+    """Nullable longs above 2^53, NULLs, strings and nested arrays come
+    back bit-exact from a LocalRelation in the plan."""
+    df = _typed_frame(spark)
+    out, table = pin_literal_with_rows(df, 3)
+    assert table is not None and table.num_rows == 3
+    assert "LocalRelation" in _optimized(out)
+    assert out.schema == df.schema
+    assert sorted(out.collect(), key=str) == sorted(df.collect(), key=str)
+    assert table["n"].to_pylist() == [_BIG, None, -_BIG]
+    assert "LocalRelation" in _optimized(pin_literal(df, 3))
+    # an empty frame is within any bound and stays literal
+    out, table = pin_literal_with_rows(df.where("false"), 3)
+    assert table.num_rows == 0 and out.collect() == []
+    assert "LocalRelation" in _optimized(out)
+
+
+def test_literal_pin_over_bound_takes_checkpoint(spark):
+    """One row over max_rows: a checkpoint pin with the same values
+    and no rows handed back."""
+    df = _typed_frame(spark)
+    out, table = pin_literal_with_rows(df, 2)
+    assert table is None
+    p = out._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" in p and "LocalRelation" not in _optimized(out)
+    assert sorted(out.collect(), key=str) == sorted(df.collect(), key=str)

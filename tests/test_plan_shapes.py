@@ -692,11 +692,24 @@ def test_bucket_search_representation_stays_compact_under_window(spark):
     chained-projection form gets inlined under the window into a
     ~4^log2(B) expression that OOMs a default-heap session at plan
     time. The optimized plan must stay KB-sized (the monster is MBs
-    before it dies) and carry the un-inlinable lambda."""
+    before it dies) and carry the un-inlinable lambda.
+
+    At this SF both columns sit under RANK_LITERAL_MAX and rank via
+    plan-literal tables, so the bucketed search is forced by turning
+    that tier off; the default tier must plan as a LocalRelation."""
+    import stockpy_spark.operators.stats as stats_mod
     from stockpy_spark.operators.stats import spearman_corr_pairs
 
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    df = spearman_corr_pairs(li, ["l_extendedprice", "l_quantity"])
+    cols = ["l_extendedprice", "l_quantity"]
+    p = spearman_corr_pairs(li, cols)._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in p  # default tier: literal rank tables
+    prev = stats_mod.RANK_LITERAL_MAX
+    stats_mod.RANK_LITERAL_MAX = 0
+    try:
+        df = spearman_corr_pairs(li, cols)
+    finally:
+        stats_mod.RANK_LITERAL_MAX = prev
     p = df._jdf.queryExecution().optimizedPlan().toString()
     assert "lambdafunction" in p  # the bound-variable fold survived
     assert len(p) < 100_000, f"bucket search re-inlined: plan {len(p)} chars"

@@ -41,8 +41,22 @@ def test_chunk_documents_grid_and_edges(spark):
         chunk_documents(docs, "text", "doc_id", chunk_tokens=8, overlap=8)
 
 
-def test_interval_concurrency_half_open_sweep(spark):
+def test_interval_concurrency_half_open_sweep(spark, monkeypatch):
+    """The key census literal-pins while it fits its cap (2 keys under
+    64 buckets); at n_buckets=32768 the cap is 1 key, so the census
+    takes the checkpoint pin. Both branches give the same levels."""
+    from stockpy_spark.operators import pinning
     from stockpy_spark.operators.timeseries import interval_concurrency
+
+    literal = []
+    with_rows = pinning.pin_literal_with_rows
+
+    def spy(df, max_rows):
+        out = with_rows(df, max_rows)
+        literal.append(out[1] is not None)
+        return out
+
+    monkeypatch.setattr(pinning, "pin_literal_with_rows", spy)
 
     t = lambda s: datetime(2024, 1, 1, 0, 0, s)
     iv = spark.createDataFrame(
@@ -55,19 +69,22 @@ def test_interval_concurrency_half_open_sweep(spark):
         ],
         "k string, s timestamp, e timestamp",
     )
-    out = interval_concurrency(iv, "s", "e", ["k"])
-    lvl = {(r.k, r.at_ts.second): r.concurrent for r in out.collect()}
-    assert lvl[("a", 0)] == 1
-    assert lvl[("a", 5)] == 2
-    # at t=10: one ends, two start -> net +1 on level 2's base of 1... the
-    # active set during [10, 12) is {#2, #3, #4} = 3
-    assert lvl[("a", 10)] == 3
-    assert lvl[("a", 12)] == 2
-    assert lvl[("a", 15)] == 1
-    assert lvl[("a", 20)] == 0
-    assert lvl[("b", 0)] == 1 and lvl[("b", 1)] == 0
-    # exactly one row per distinct boundary instant
-    assert out.groupBy("k", "at_ts").count().where("count > 1").isEmpty()
+    for n_buckets, is_literal in ((64, True), (32768, False)):
+        literal.clear()
+        out = interval_concurrency(iv, "s", "e", ["k"], n_buckets=n_buckets)
+        assert literal == [is_literal], n_buckets
+        lvl = {(r.k, r.at_ts.second): r.concurrent for r in out.collect()}
+        assert lvl[("a", 0)] == 1
+        assert lvl[("a", 5)] == 2
+        # at t=10: one ends, two start -> net +1 on level 2's base of 1... the
+        # active set during [10, 12) is {#2, #3, #4} = 3
+        assert lvl[("a", 10)] == 3
+        assert lvl[("a", 12)] == 2
+        assert lvl[("a", 15)] == 1
+        assert lvl[("a", 20)] == 0
+        assert lvl[("b", 0)] == 1 and lvl[("b", 1)] == 0
+        # exactly one row per distinct boundary instant
+        assert out.groupBy("k", "at_ts").count().where("count > 1").isEmpty()
 
 
 def test_hll_rollup_quality_gate_and_grid(spark):

@@ -42,8 +42,14 @@ def main() -> None:
     from stockpy_spark.registry import QUERIES
 
     sc = spark.sparkContext
+    retained = int(sc.getConf().get("spark.ui.retainedStages", "1000"))
+    n_stages = 0
 
     def shuffle_total() -> int:
+        # the status store evicts its oldest stages past
+        # spark.ui.retainedStages, which would silently deflate every
+        # later per-query delta: stop the sweep before that can happen
+        nonlocal n_stages
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         store = sc._jsc.sc().statusStore()
         empty = sc._jvm.java.util.ArrayList()
@@ -51,8 +57,14 @@ def main() -> None:
             empty,
             *[getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)]
         )
+        n_stages = stages.size()
+        if n_stages >= retained:
+            raise SystemExit(
+                f"{n_stages} stages reached spark.ui.retainedStages="
+                f"{retained}; evicted stages would deflate the ledger"
+            )
         return sum(
-            stages.apply(i).shuffleWriteBytes() for i in range(stages.size())
+            stages.apply(i).shuffleWriteBytes() for i in range(n_stages)
         )
 
     QUERIES["a2_count_star"](spark, sf_dir).collect()
@@ -64,9 +76,10 @@ def main() -> None:
         w0 = shuffle_total()
         try:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            out[name] = round((shuffle_total() - w0) / 1e6, 3)
         except Exception as e:  # record, keep sweeping
             errs[name] = str(e)[:200]
+        else:
+            out[name] = round((shuffle_total() - w0) / 1e6, 3)
         print(f"  {name}: {out.get(name, 'ERR')}", file=sys.stderr)
 
     path = os.path.join(
@@ -78,6 +91,8 @@ def main() -> None:
             {
                 "sf_dir": sf_dir,
                 "n_queries": len(out),
+                "n_stages": n_stages,
+                "retained_stages": retained,
                 "wall_total_s": round(time.time() - t_start, 1),
                 "shuffle_write_mb": dict(sorted(out.items())),
                 "errors": errs,
