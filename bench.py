@@ -97,8 +97,9 @@ HEADLINE = [
     # and CUSUM via the Lindley closed form (one key-shuffle of
     # windows). setsim_jaccard_join is deliberately NOT a headline:
     # the synthetic corpus's tiny vocabulary makes candidate volume
-    # quasi-quadratic (23 s at sf0.1) — an honest property of prefix
-    # filtering on low-entropy token sets, recorded in BASELINE.md §4.
+    # quasi-quadratic (34 s at sf0.1 on 4 vCPUs) — an honest property
+    # of prefix filtering on low-entropy token sets, recorded in
+    # BASELINE.md §4.
     "drift_psi_value",
     "drift_ks_value",
     "stats_corr_matrix",

@@ -4,11 +4,13 @@ Four tiers, all distributed, none driver-side:
 
 1. Exact: hash-groupBy on a normalized-text fingerprint (md5 — engine
    portable, unlike murmur3 F.hash).
-2. Word-set Jaccard: exact pairwise similarity via token inverted index
-   (explode distinct tokens -> self-join on token -> count intersections).
-   O(sum over tokens of df(token)^2) pairs — correct but quadratic in
-   document frequency; use as the *verify* stage after LSH candidates at
-   scale, not as the discovery stage.
+2. Word-set / char-n-gram Jaccard: exact pairwise similarity through
+   the one prefix-filtered set-Jaccard kernel (operators/setsim.py):
+   only each document's rarest tokens join, candidates are verified
+   with an exact intersection. No longer quadratic in stopword
+   frequency, but still quadratic in near-dup cluster size (those
+   pairs ARE the output); use as the *verify* stage after LSH
+   candidates at scale, not as the discovery stage.
 3. MinHash + LSH banding: the 100 TB discovery path. Deterministic
    md5-based minhash (portable across engines so the DuckDB oracle can
    replicate it bit-for-bit), banded into buckets; only same-bucket pairs
@@ -26,8 +28,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from stockpy_spark.functions.text import fingerprint_md5, tokenize
+from stockpy_spark.functions.text import char_ngrams, fingerprint_md5, tokenize
 from stockpy_spark.operators.pinning import pin, pin_literal
+from stockpy_spark.operators.setsim import set_jaccard_pairs, word_sets
 
 
 def exact_dedup_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -58,9 +61,10 @@ def _distinct_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-#: word_jaccard_pairs is verify-tier: its token self-join is quadratic
-#: in hot-token document frequency. The guard makes accidentally
-#: pointing it at a corpus a loud error instead of a cluster-melter.
+#: word_jaccard_pairs is verify-tier: its candidate join is quadratic
+#: in near-dup cluster size and, on low-entropy text, in prefix-token
+#: document frequency. The guard makes accidentally pointing it at a
+#: corpus a loud error instead of a cluster-melter.
 WORD_JACCARD_MAX_DOCS = 200_000
 
 
@@ -71,17 +75,18 @@ def word_jaccard_pairs(
     threshold: float,
     max_docs: int | None = WORD_JACCARD_MAX_DOCS,
 ) -> DataFrame:
-    """Exact pairwise Jaccard over distinct word sets via inverted index.
+    """Exact pairwise Jaccard over distinct lowercase word sets,
+    through the prefix-filtered kernel (setsim.set_jaccard_pairs).
 
     Returns (d1, d2, jaccard) with d1 < d2 and jaccard >= threshold,
-    jaccard rounded to 6 decimals. VERIFY-TIER, not a scale path: the
-    token self-join explodes on hot tokens (stopwords everywhere ->
-    df(token)=n -> n^2 rows). At scale run this only on LSH candidates
-    (see minhash_lsh_pairs) or use the linear star-edge/assignment
-    paths; to make that boundary enforceable rather than advisory, the
-    call raises ValueError when the input exceeds ``max_docs`` rows
-    (pass ``max_docs=None`` to opt out — e.g. when the input is
-    already a bounded candidate set).
+    jaccard rounded to 6 decimals (the test runs on the rounded value).
+    VERIFY-TIER, not a scale path: candidates are quadratic in near-dup
+    cluster size. At scale run this only on LSH candidates (see
+    minhash_lsh_pairs) or use the linear star-edge/assignment paths; to
+    make that boundary enforceable rather than advisory, the call
+    raises ValueError when the input exceeds ``max_docs`` rows (pass
+    ``max_docs=None`` to opt out — e.g. when the input is already a
+    bounded candidate set).
     """
     if max_docs is not None:
         n = df.count()
@@ -92,85 +97,19 @@ def word_jaccard_pairs(
                 "Use minhash_lsh_star_edges / minhash_dedup_assign at corpus "
                 "scale, or pass max_docs=None for a bounded candidate set."
             )
-    # r17 (guide §2.3/§3.2 applied to the self-join): EXACT prefix
-    # filtering (Bayardo et al. 2007 "Scaling Up All Pairs Similarity
-    # Search"; Chaudhuri et al. 2006) replaces the full inverted-index
-    # self-join. Under any global token order, J(A,B) >= t implies
-    # |A ∩ B| >= ceil(t*|A|), so A and B must share a token among each
-    # set's FIRST |X| - ceil(t*|X|) + 1 tokens — candidate pairs come
-    # from joining only those prefix tokens, and ordering tokens by
-    # ascending document frequency puts the RAREST tokens in the
-    # prefix: the df(stopword)^2 blowup of the old full self-join
-    # (every pair of docs sharing "the" was a join row) is gone while
-    # the result stays exact — candidates are verified with the true
-    # intersection of the full distinct-token sets (array_intersect of
-    # the same element sets the old per-token count aggregated), and
-    # the final jaccard/round/filter is unchanged. Because the output
-    # filter admits round(j, 6) >= threshold (a raw j up to 5e-7 BELOW
-    # t), pruning uses t_eff = t - 1e-6: strictly longer prefixes and
-    # a looser size bound, i.e. a candidate SUPERSET. Still quadratic
-    # in genuine near-dup cluster size (those pairs ARE the output) —
-    # verify-tier, but no longer quadratic in stopword frequency.
-    tok_sets = df.select(
-        F.col(id_col).alias("doc"),
-        F.array_sort(
-            F.array_distinct(tokenize(F.lower(F.col(text_col))))
-        ).alias("ts"),
-    ).filter(F.size("ts") > 0)
-    toks = tok_sets.select(
-        "doc", F.size("ts").alias("sz"), F.explode("ts").alias("tok")
-    )
-    t_eff = max(0.0, float(threshold) - 1e-6)
-    # global rarity order: (document frequency asc, token asc) — total
-    # and deterministic; no broadcast hint on the df table (vocabulary
-    # grows with the corpus; AQE broadcasts while it fits)
-    tdf = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("__df"))
-    ranked = toks.join(tdf, "tok").withColumn(
-        "__r",
-        F.row_number().over(
-            Window.partitionBy("doc").orderBy(F.asc("__df"), F.asc("tok"))
-        ),
-    )
-    prefix = ranked.filter(
-        F.col("__r")
-        <= F.col("sz") - F.ceil(F.lit(t_eff) * F.col("sz")) + 1
-    ).select("doc", "sz", "tok")
-    a, b = prefix.alias("a"), prefix.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.tok") == F.col("b.tok"))
-            & (F.col("a.doc") < F.col("b.doc"))
-            & (
-                F.least(F.col("a.sz"), F.col("b.sz"))
-                >= F.lit(t_eff) * F.greatest(F.col("a.sz"), F.col("b.sz"))
-            ),
-        )
-        .select(F.col("a.doc").alias("d1"), F.col("b.doc").alias("d2"))
-        .distinct()
-    )
-    sa = tok_sets.select(F.col("doc").alias("d1"), F.col("ts").alias("__ta"))
-    sb = tok_sets.select(F.col("doc").alias("d2"), F.col("ts").alias("__tb"))
-    verified = (
-        cand.join(sa, "d1")
-        .join(sb, "d2")
-        .select(
-            "d1",
-            "d2",
-            F.size(F.array_intersect("__ta", "__tb")).alias("inter"),
-            F.size("__ta").alias("sz1"),
-            F.size("__tb").alias("sz2"),
-        )
-    )
+    return _round6_pairs(word_sets(df, text_col, id_col), threshold)
+
+
+def _round6_pairs(sets: DataFrame, threshold: float) -> DataFrame:
+    """(d1, d2, jaccard) over set_jaccard_pairs, jaccard rounded to 6
+    decimals and filtered on the ROUNDED value (the oracles' contract)."""
+    jac = F.round(F.col("n_inter") / F.col("n_union"), 6)
     return (
-        verified.withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("sz1") + F.col("sz2") - F.col("inter")), 6
-            ),
+        set_jaccard_pairs(sets, threshold)
+        .select(
+            F.col("id_a").alias("d1"), F.col("id_b").alias("d2"), jac.alias("jaccard")
         )
         .filter(F.col("jaccard") >= threshold)
-        .select("d1", "d2", "jaccard")
     )
 
 
@@ -294,37 +233,15 @@ def ngram_jaccard_pairs(
     df: DataFrame, text_col: str, id_col: str, n: int, threshold: float
 ) -> DataFrame:
     """Exact pairwise Jaccard over distinct character n-gram (shingle)
-    sets — the character-level twin of word_jaccard_pairs, robust to
-    tokenization differences (no-space scripts, punctuation-glued
-    words). Same inverted-index shape and the same scale caveat: use as
-    the verify stage on LSH candidates, not for discovery."""
-    from stockpy_spark.functions.text import char_ngrams
-
-    sh = df.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.array_distinct(char_ngrams(F.col(text_col), n))).alias("tok"),
+    sets, robust to tokenization differences (no-space scripts,
+    punctuation-glued words). Returns (d1, d2, jaccard) like
+    word_jaccard_pairs, through the same prefix-filtered kernel
+    (operators/setsim.py)."""
+    sets = df.select(
+        F.col(id_col).alias("id"),
+        F.array_distinct(char_ngrams(F.col(text_col), n)).alias("toks"),
     )
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.tok") == F.col("b.tok")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("d1"), F.col("b.doc").alias("d2"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    # no broadcast hints: sizes has one row per doc and grows with the
-    # corpus; AQE broadcasts it while small, shuffles at scale
-    sa = sizes.select(F.col("doc").alias("d1"), F.col("sz").alias("sz1"))
-    sb = sizes.select(F.col("doc").alias("d2"), F.col("sz").alias("sz2"))
-    return (
-        inter.join(sa, "d1")
-        .join(sb, "d2")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("sz1") + F.col("sz2") - F.col("inter")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("d1", "d2", "jaccard")
-    )
+    return _round6_pairs(sets, threshold)
 
 
 def minhash_signatures(
@@ -979,9 +896,9 @@ def shingle_containment_pairs(
     containment(src in dst) >= threshold, rounded to 6. Word shingles
     (not single tokens) so the overlap evidence is contiguous spans.
 
-    VERIFY-TIER like word_jaccard_pairs (the shingle inverted-index
-    self-join is quadratic in hot-shingle document frequency) and
-    guarded by the same ``max_docs`` ValueError; at corpus scale feed
+    VERIFY-TIER (its shingle inverted-index self-join is quadratic in
+    hot-shingle document frequency) and guarded by the same
+    ``max_docs`` ValueError as word_jaccard_pairs; at corpus scale feed
     it LSH candidates (minhash bucket join) with ``max_docs=None``.
     Shingles are far rarer than tokens (a 3-word shingle's document
     frequency is near 1 in organic text), so the practical wall is

@@ -224,10 +224,11 @@ WHERE round(i / CAST(sa.sz + sb.sz - i AS DOUBLE), 6) >= 0.8
 
 
 def q_dedup_ngram_jaccard(spark, sf_dir):
-    """Character 8-gram shingle Jaccard on a doc subset — the inverted
-    index over shingles is quadratic in shingle document-frequency, so
-    the oracle-checked query runs on a 1-in-3 sample; at scale this op
-    verifies LSH candidates only."""
+    """Character 8-gram shingle Jaccard >= 0.5 on a 1-in-3 doc sample.
+    The join is prefix-filtered (operators/setsim.py), so only each
+    document's rarest shingles join; the sample stays because the
+    oracle replays it with a naive all-pairs shingle self-join. At
+    scale this op verifies LSH candidates only."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 0)
     return ngram_jaccard_pairs(docs, "text", "doc_id", n=8, threshold=0.5)
 

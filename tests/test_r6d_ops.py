@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from stockpy_spark.operators.dedup import ngram_jaccard_pairs, word_jaccard_pairs
 from stockpy_spark.operators.drift import ks_2samp, population_stability_index
 from stockpy_spark.operators.setsim import jaccard_similarity_join
 from stockpy_spark.operators.stats import (
@@ -19,53 +20,76 @@ from stockpy_spark.operators.stats import (
 from stockpy_spark.operators.timeseries import cusum_changepoint
 
 
-# --- jaccard_similarity_join ---------------------------------------------
+# --- exact set-Jaccard joins (setsim + dedup word/n-gram) ---------------
 
-def _docs(spark):
-    return spark.createDataFrame(
-        [
-            Row(doc_id=1, text="alpha beta gamma delta"),
-            Row(doc_id=2, text="alpha beta gamma delta"),          # dup of 1
-            Row(doc_id=3, text="alpha beta gamma epsilon"),        # 3/5 of 1
-            Row(doc_id=4, text="zeta eta theta iota kappa"),       # disjoint
-            Row(doc_id=5, text="Alpha BETA gamma delta"),          # case dup
-            Row(doc_id=6, text=""),                                # empty
-        ]
+# The same set shapes spelled as words and as character bigrams: 1 and 2
+# are duplicates, 3 has Jaccard 3/5 with 1, 4 is disjoint, 5 is 1 with
+# different case, 6 is empty. In "split", J(1, 2) = 2/3.
+_TEXTS = {
+    "dups": {
+        "word": ["alpha beta gamma delta", "alpha beta gamma delta",
+                 "alpha beta gamma epsilon", "zeta eta theta iota kappa",
+                 "Alpha BETA gamma delta", ""],
+        "ngram": ["abcde", "abcde", "abcdf", "vwxyz", "ABCDE", ""],
+    },
+    "split": {"word": ["a b c", "a b"], "ngram": ["abcd", "abc"]},
+}
+
+# case -> (texts, [(threshold, pairs that must be in, pairs that must be out)])
+_CASES = {
+    "bruteforce": ("dups", [(0.5, {(1, 2), (1, 3), (1, 5)}, {(1, 4), (1, 6), (4, 6)})]),
+    "boundary": ("dups", [(0.6, {(1, 3)}, set()), (0.61, set(), {(1, 3)})]),
+    # J = 2/3 rounds to 0.666667: the round(j, 6) joins admit the pair,
+    # setsim's unrounded test rejects it
+    "rounding_split": ("split", [(0.6666667, set(), set())]),
+}
+
+
+def _set_join(spark, join, texts, t):
+    """Run one public join; {(lo_id, hi_id): jaccard}."""
+    df = spark.createDataFrame(
+        [Row(doc_id=i, text=x) for i, x in enumerate(texts, 1)]
     )
+    if join == "setsim":
+        out = jaccard_similarity_join(df, "text", "doc_id", t)
+        return {(r.id_a, r.id_b): r.jaccard for r in out.collect()}
+    if join == "word":
+        out = word_jaccard_pairs(df, "text", "doc_id", t)
+    else:
+        out = ngram_jaccard_pairs(df, "text", "doc_id", 2, t)
+    return {(r.d1, r.d2): r.jaccard for r in out.collect()}
 
 
-def _pairs(spark, t):
-    out = jaccard_similarity_join(_docs(spark), "text", "doc_id", t)
-    return {(r.id_a, r.id_b): r.jaccard for r in out.collect()}
-
-
-def test_setsim_matches_bruteforce(spark):
-    got = _pairs(spark, 0.5)
-    # brute force over the token sets
-    docs = {
-        1: {"alpha", "beta", "gamma", "delta"},
-        2: {"alpha", "beta", "gamma", "delta"},
-        3: {"alpha", "beta", "gamma", "epsilon"},
-        4: {"zeta", "eta", "theta", "iota", "kappa"},
-        5: {"alpha", "beta", "gamma", "delta"},
-    }
+def _brute_force(join, texts, t):
+    if join == "ngram":
+        sets = [{x.lower()[i:i + 2] for i in range(len(x) - 1)} for x in texts]
+    else:
+        sets = [set(x.lower().split()) for x in texts]
     want = {}
-    ids = sorted(docs)
-    for i, a in enumerate(ids):
-        for b in ids[i + 1:]:
-            j = len(docs[a] & docs[b]) / len(docs[a] | docs[b])
-            if j >= 0.5:
-                want[(a, b)] = round(j, 6)
-    assert got == want
-    assert (1, 2) in got and got[(1, 2)] == 1.0
-    assert (1, 5) in got  # case-folded duplicate
-    assert not any(4 in p or 6 in p for p in got)
+    for a in range(len(sets)):
+        for b in range(a + 1, len(sets)):
+            inter = len(sets[a] & sets[b])
+            if inter:
+                j = inter / len(sets[a] | sets[b])
+                if (j if join == "setsim" else round(j, 6)) >= t:
+                    want[(a + 1, b + 1)] = round(j, 6)
+    return want
 
 
-def test_setsim_exact_threshold_boundary(spark):
-    # jaccard(1,3) = 3/5 = 0.6 exactly: included at 0.6, excluded above
-    assert (1, 3) in _pairs(spark, 0.6)
-    assert (1, 3) not in _pairs(spark, 0.61)
+@pytest.mark.parametrize("join", ["setsim", "word", "ngram"])
+@pytest.mark.parametrize("case", sorted(_CASES))
+def test_set_jaccard_joins_match_bruteforce(spark, case, join):
+    """All three public joins run the one prefix-filtered kernel
+    (setsim.set_jaccard_pairs): each must equal a pure-Python all-pairs
+    Jaccard under its own threshold test."""
+    texts_key, checks = _CASES[case]
+    texts = _TEXTS[texts_key][join if join == "ngram" else "word"]
+    for t, must_in, must_out in checks:
+        got = _set_join(spark, join, texts, t)
+        assert got == _brute_force(join, texts, t)
+        assert must_in <= set(got) and not must_out & set(got)
+        if case == "rounding_split":
+            assert ((1, 2) in got) == (join != "setsim")
 
 
 # --- PSI -----------------------------------------------------------------
