@@ -1,7 +1,12 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+(default: the sf0.1 test data) on local[$SPARK_GRAFT_CPUS] and prints
+TWO JSON lines: the per-query shuffle/spill detail, then the contract line
+{"metric": ..., "value": total_sec, "unit": "sec", "queries": {name: sec},
+"sf": ...}, which is always last. It also writes BENCH_LEDGER.json.
+
+Shuffle and spill bytes come from perfbench's StatusReader: the stages
+the scheduler allocated while the query ran, read from the status store
+after the listener bus drains.
 
 Each query is forced end-to-end with a noop sink (full computation, no
 driver collect, no disk write) — the fair way to time a distributed plan.
@@ -16,6 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.status import StatusReader
 from stockpy_spark.registry import QUERIES
 from stockpy_spark.session import get_spark
 
@@ -153,6 +159,19 @@ HEADLINE = [
 ]
 
 
+def evicted_ran_stages(window) -> int:
+    """Stages that ran inside ``window`` but were evicted from the
+    status store, so their bytes are missing from ``window.totals()``.
+    The store evicts never-completed (SKIPPED) stages first and those
+    carry no metrics, so ``window.evicted_stages`` alone over-reports;
+    each retained job still counts the stages it completed."""
+    if window.evicted_jobs:
+        return window.evicted_stages
+    completed = sum(j["numCompletedStages"] for j in window.jobs)
+    kept = {s["stageId"] for s in window.stages if s["status"] == "COMPLETE"}
+    return completed - len(kept)
+
+
 def calibrate(spark) -> float:
     """Fixed synthetic CPU+shuffle micro-workload, timed: 120M-row
     range with per-row arithmetic, a 100k-key hash aggregate (one
@@ -207,16 +226,8 @@ def calibrate(spark) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # the shuffle ledger sums stage metrics from the AppStatusStore,
-    # which EVICTS stages past spark.ui.retainedStages (default 1000).
-    # The r14 51-query headline crosses that limit (the 14-stage
-    # release pipeline alone adds dozens of stages x 2 runs), at which
-    # point the cumulative counters go BACKWARDS and per-query deltas
-    # turn negative. Retain enough stages for the whole run.
-    spark = get_spark(
-        "stockpy_spark_bench",
-        extra_conf={"spark.ui.retainedStages": "100000"},
-    )
+    spark = get_spark("stockpy_spark_bench")
+    reader = StatusReader(spark)
     names = [n for n in HEADLINE if n in QUERIES]
 
     # warm the JVM/catalyst once (not timed): a lineitem action plus the
@@ -229,62 +240,35 @@ def main() -> None:
     # host-speed constant (after warmup, before the timed queries)
     calibration = calibrate(spark)
 
-    def shuffle_totals() -> tuple[int, int]:
-        """Cumulative (shuffle_write_bytes, spilled_bytes) across all
-        stages so far, from the in-process AppStatusStore (the store
-        behind the UI/REST API — works with the UI disabled). Per-query
-        DELTAS of these are the drift-immune plan metric wall-clock is
-        not: shuffle volume is a property of the PLAN, identical across
-        reruns and hosts, so a cross-round diff flags a lost broadcast
-        or lost partial aggregate directly, with no calibration
-        division. Scala default args are fetched explicitly (py4j has
-        no default-arg support).
-
-        r16 measurement fix (declared in OPTIMIZATION_r16.md): the
-        AppStatusStore is fed ASYNCHRONOUSLY by the listener bus, so a
-        query's final stage metrics can post after the next bracketing
-        read — measured at r16 start as pipeline_dedup_cc's ledger
-        entry reading 1.21-1.22 MB in the full bench (late posts from
-        its own first, untimed run landing in the timed run's window)
-        vs a byte-identical 1.192 MB x4 in isolation, flagged by
-        ledger_diff as drift on an untouched query. Draining the bus
-        before each read makes the per-query attribution exact; plan
-        bytes themselves are unchanged."""
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        store = spark.sparkContext._jsc.sc().statusStore()
-        empty = spark.sparkContext._jvm.java.util.ArrayList()
-        stages = store.stageList(
-            empty,
-            *[getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)]
-        )
-        write = spill = 0
-        for i in range(stages.size()):
-            sd = stages.apply(i)
-            write += sd.shuffleWriteBytes()
-            spill += sd.memoryBytesSpilled() + sd.diskBytesSpilled()
-        return write, spill
-
     # best-of-2 per query: the first execution pays one-off plan
     # compilation and scheduler warmup that a long-running cluster
     # amortizes away; the min is the steady-state per-query cost. Each
     # run is still end-to-end (fresh plan, full computation, noop sink).
-    # Shuffle/spill deltas are taken over the LAST run only — the plan
-    # is the same both runs, so the bytes are too.
+    # Shuffle/spill bytes are read over the LAST run only — the plan
+    # is the same both runs, so the bytes are too. Shuffle volume is a
+    # property of the PLAN, identical across reruns and hosts, so a
+    # cross-round diff flags a lost broadcast or partial aggregate
+    # with no calibration division.
     timings: dict[str, float] = {}
     shuffle_mb: dict[str, float] = {}
     spill_mb: dict[str, float] = {}
     for name in names:
         best = float("inf")
         for _ in range(2):
-            w0, s0 = shuffle_totals()
+            mark = reader.mark()
             t0 = time.time()
             df = QUERIES[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             best = min(best, time.time() - t0)
-            w1, s1 = shuffle_totals()
+        window = reader.window(mark)
+        if lost := evicted_ran_stages(window):
+            print(f"{name}: {lost} stages evicted from "
+                  "the status store; its bytes are under-counted",
+                  file=sys.stderr)
+        totals = window.totals()
         timings[name] = round(best, 3)
-        shuffle_mb[name] = round((w1 - w0) / 1e6, 2)
-        spill_mb[name] = round((s1 - s0) / 1e6, 2)
+        shuffle_mb[name] = round(totals["shuffle_write_mb"], 2)
+        spill_mb[name] = round(totals["spill_mb"], 2)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     total = round(sum(timings.values()), 3)
@@ -340,7 +324,7 @@ def main() -> None:
                 # relative to what this host can do)
                 "calibration_sec": calibration,
                 "normalized_total": round(total / calibration, 2),
-                # drift-immune plan totals (see shuffle_totals):
+                # drift-immune plan totals (see the query loop):
                 # cross-round deltas here mean the PLAN changed, not
                 # the host; per-query detail is on the previous line
                 "total_shuffle_write_mb": round(sum(shuffle_mb.values()), 1),

@@ -67,8 +67,10 @@ Spark plans as independent recomputations of the census subtree
 (cross-branch exchange reuse does not happen here; the round-8/11
 ledger documents it). Unpinned, the branches can bucket against
 DIFFERENT edges and the prefix closure silently miscounts rows near
-the differing boundaries — caught by tools/outlier_probe.py's
-bucket-invariance assert, off by 2 counts at 200k rows. The old
+the differing boundaries — caught by the outlier probe's
+bucket-invariance assert, off by 2 counts at 200k rows (BASELINE.md
+"Round-12 equal-frequency bucketing + value-outlier probe"; the assert
+now lives in tests/test_outlier_invariance.py). The old
 (min, max) census never needed pinning because min/max are exact.
 The checkpoint is census-sized (1 row, or one row per group) and
 replaces the second census evaluation the branch fan-out was already

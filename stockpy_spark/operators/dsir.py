@@ -101,8 +101,10 @@ def dsir_bucket_partials(
     partials — the DISTRIBUTION-ESTIMATE input, Counter-combined per
     partition (at most 2*n_buckets keys live per worker, so no flush
     cap is needed), so the downstream ``groupBy(__b)`` shuffles
-    KBs regardless of corpus size. r14 probe (tools/dsir_probe.py):
-    the expression explode+bucket scan is interpreted-HOF-bound
+    KBs regardless of corpus size. r14 attribution (BASELINE.md
+    "Round-14: sample_dsir_weights attribution + kernel"; the probe
+    script is in commit e029af0, tools/dsir_probe.py): the expression
+    explode+bucket scan is interpreted-HOF-bound
     (5.9 s vs a 3.1 s kernel at sf1 — the word_ngrams transform/
     array_join lambdas, not the md5, which measured free), while a
     per-DOC kernel feeding this aggregate loses Spark's map-side
@@ -249,9 +251,10 @@ def dsir_importance_weights(
     than 2 tokens carry weight 0 (an empty product of ratios) but
     still draw a Gumbel key, so short docs are sampled at the prior."""
     if use_kernel:
-        # r14 kernel path (tools/dsir_probe.py attribution): the
-        # explode+bucket scan was interpreted-HOF-bound — word_ngrams'
-        # transform/array_join lambdas, NOT the md5 or the aggregate —
+        # r14 kernel path (BASELINE.md "Round-14: sample_dsir_weights
+        # attribution + kernel"): the explode+bucket scan was
+        # interpreted-HOF-bound — word_ngrams' transform/array_join
+        # lambdas, NOT the md5 or the aggregate —
         # so both corpus scans move to Arrow kernels (1.9x on the scan
         # stage). The stats branch takes partition-level partials
         # (keeps the map-side combine); the scoring branch takes

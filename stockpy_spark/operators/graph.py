@@ -141,17 +141,7 @@ def connected_components(
     frontier = labels  # round 1: every endpoint announces its own label
     frontier_size = None  # unknown until the first round's count
 
-    # STOCKPY_CC_TRACE=1: per-round wall + frontier-size table on
-    # stderr (the admitter-trace pattern) — the empirical guide-§1 view
-    # of where an iterative query's eager loop spends its time.
-    import os as _os
-    import sys as _sys
-    import time as _time
-
-    _trace = _os.environ.get("STOCKPY_CC_TRACE") == "1"
-
     for rnd in range(max_iter):
-        _t0 = _time.time() if _trace else 0.0
         sender = frontier.select(F.col("v").alias("fv"), "label")
         if big_graph and rnd > 0 and frontier_size <= FRONTIER_BROADCAST_MAX:
             # keeps the (big) edge frame scan shuffle-free; the label
@@ -246,13 +236,6 @@ def connected_components(
             if have_metrics
             else frontier.count()
         )
-        if _trace:
-            print(
-                f"cc round {rnd}: {_time.time() - _t0:.2f}s "
-                f"frontier={frontier_size}",
-                file=_sys.stderr,
-                flush=True,
-            )
         labels = new_labels.drop("__old")
         if frontier_size == 0:
             # singletons (vertices with no edges) keep their own id;

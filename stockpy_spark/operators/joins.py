@@ -137,8 +137,10 @@ def salted_join(
     explicit salting when one key dominates an entire stage (the
     classic null-key / default-value hot spot).
 
-    Measured (tools/skew_bench.py: local[32], 90% of rows on ONE key,
-    1k-row dim with auto-broadcast disabled to force the shuffle):
+    Measured (BASELINE.md §4 "Skew crossover"; the script is
+    tools/skew_bench.py in commit e029af0: local[32], 90% of rows on
+    ONE key, 1k-row dim with auto-broadcast disabled to force the
+    shuffle):
     at 20M fact rows plain join takes 6.8 s with AQE skew-split on
     (7.5 s off — the split barely bites on this shape) vs 3.0 s salted
     with 8 buckets and 2.4 s with 32 — a 2.8x win. At 5M rows the gap

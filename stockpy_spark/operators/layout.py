@@ -19,8 +19,9 @@ sorted write.
 
 ``measure_skipping`` quantifies the win on real files: it writes the
 same frame sorted both ways and reports, per file, each dimension's
-min/max span — the driver-side proof (tools/zorder_probe.py records
-the numbers in BASELINE.md §4) rather than a claim.
+min/max span — the driver-side proof (BASELINE.md §4 "Z-order layout
+probe"; the probe script is in commit e029af0, tools/zorder_probe.py)
+rather than a claim.
 """
 
 from __future__ import annotations

@@ -1040,28 +1040,6 @@ def _adm_kcat():
     )
 
 
-def _emit_adm_trace(batch_id: int, marks: list) -> None:
-    """One JSON line of per-step wall deltas for an admitter batch
-    (STOCKPY_ADM_TRACE=1) — the measurement side of the spine-fusion
-    work: fuse what the trace says is serial and large, not what looks
-    fusable."""
-    import json as _json
-
-    steps = {
-        label: round(t - marks[i][1], 3)
-        for i, (label, t) in enumerate(marks[1:])
-    }
-    print(
-        _json.dumps(
-            {
-                "adm_trace": batch_id,
-                "steps": steps,
-                "total": round(marks[-1][1] - marks[0][1], 3),
-            }
-        )
-    )
-
-
 def _append_admission_index(
     nfps: DataFrame,
     nkeys: DataFrame,
@@ -1364,27 +1342,14 @@ def run_incremental_minhash_admitter(
         bloom_k = int(meta.get("bloom_k", bloom_k))
 
     def feb(batch_df: DataFrame, batch_id: int) -> None:
-        # STOCKPY_ADM_TRACE=1: per-step wall attribution for the batch
-        # spine, one JSON line per batch (tools/admitter_growth_probe
-        # reads it with ADM_PROBE_TRACE) — measurement hook for the
-        # job-fusion work, zero cost when unset.
-        import time as _time
-
-        _trace = os.environ.get("STOCKPY_ADM_TRACE")
-        _marks: list = [("start", _time.time())]
-
-        def _mark(label: str) -> None:
-            if _trace:
-                _marks.append((label, _time.time()))
-
-        # ONE minhash pass per batch (r15 spine fusion, measured by the
-        # trace hook: the batch was signature-hashed up to 4x per batch
-        # — key screen, admission stages 2-3, and twice inside the
-        # index appends — and the signature pass dominates each of
-        # those jobs). Sign once here, pin, and every consumer reuses
-        # the pinned (doc, band, bsig) frame. The pin is submitted
-        # lazily below so the screened path can overlap it with the
-        # fp screen.
+        # ONE minhash pass per batch (r15 spine fusion, BASELINE.md
+        # "Round-15: admitter spine fused"; the batch was
+        # signature-hashed up to 4x per batch — key screen, admission
+        # stages 2-3, and twice inside the index appends — and the
+        # signature pass dominates each of those jobs). Sign once here,
+        # pin, and every consumer reuses the pinned (doc, band, bsig)
+        # frame. The pin is submitted lazily below so the screened path
+        # can overlap it with the fp screen.
         from stockpy_spark.operators.dedup import (
             _band_signatures,
             _hash_kernel,
@@ -1404,7 +1369,6 @@ def run_incremental_minhash_admitter(
         legacy = "fpp" not in fps_raw.columns or not _fs_isdir(
             spark, bloom_fps_dir
         )
-        _mark("read_state_meta")
         # adaptive screen choice (the AQE instinct applied here): the
         # bloom+prune machinery runs ~12 jobs per batch — pure win
         # once the index dwarfs that fixed cost, pure overhead while
@@ -1419,7 +1383,6 @@ def run_incremental_minhash_admitter(
             + _dir_parquet_bytes(spark, keys_dir)
             < full_scan_below_bytes
         )
-        _mark("byte_census")
 
         if legacy or small:  # full precise path
             bs_batch = sig_frame.transform(pin)
@@ -1492,7 +1455,6 @@ def run_incremental_minhash_admitter(
                     bs_batch.select("band", "bsig").distinct()
                 )
                 sus_fp, fp_pref = f_fp.result()
-            _mark("screens")
             if fp_pref:
                 standing_fps = (
                     fps_raw.where(F.col("fpp").isin(fp_pref))
@@ -1523,7 +1485,6 @@ def run_incremental_minhash_admitter(
             text_col, id_col, num_hashes, bands, hash_fn,
             band_sigs=bs_batch,  # reuse the pinned signature pass
         ).transform(pin)  # 3 consumers, compute once
-        _mark("admit_pin")
 
         def w_admitted():
             admitted.withColumn("batch_id", F.lit(batch_id)).write.mode(
@@ -1532,9 +1493,6 @@ def run_incremental_minhash_admitter(
 
         if admitted.isEmpty():  # nothing admitted -> index unchanged;
             w_admitted()        # skip the append jobs entirely
-            _mark("admitted_write")
-            if _trace:
-                _emit_adm_trace(batch_id, _marks)
             return
         # the admitted docs' key sets, derived from frames ALREADY
         # pinned (semi-join the signatures, one md5 scan for the fps)
@@ -1559,7 +1517,6 @@ def run_incremental_minhash_admitter(
             f_nk = pool.submit(lambda: nkeys_lazy.transform(pin))
             nfps, nkeys = f_nf.result(), f_nk.result()
             f_w.result()
-        _mark("admitted_write_and_key_pins")
         if legacy:  # keep the legacy layout consistent for its life
             nfps.withColumn("batch_id", F.lit(batch_id)).write.mode(
                 "append"
@@ -1572,9 +1529,6 @@ def run_incremental_minhash_admitter(
                 nfps, nkeys, state_dir, batch_id, "append",
                 bloom_m_bits, bloom_k,
             )
-        _mark("index_appends")
-        if _trace:
-            _emit_adm_trace(batch_id, _marks)
 
     with fresh_stream_width(stream.sparkSession):
         q = (

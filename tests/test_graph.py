@@ -100,6 +100,40 @@ def test_star_edges_give_same_components_as_all_pairs(spark):
     assert any(v != k for k, v in cc_star.items())  # non-trivial clusters exist
 
 
+def test_hot_lsh_bucket_collapses_to_one_representative(spark):
+    """A boilerplate-heavy corpus puts most documents into ONE LSH bucket
+    in every band. The star-edge components must keep one
+    representative for the byte-identical block and every unique doc
+    as its own (BASELINE.md §4 "CC hot-bucket skew probe" times the
+    same shape at 1M docs)."""
+    from stockpy_spark.operators.dedup import minhash_lsh_star_edges
+
+    n, n_dup = 200, 180
+    boiler = (
+        "terms of service apply to all content on this page please read "
+        "carefully before proceeding all rights reserved contact support"
+    )
+    # unique docs: 8 tokens carved from a per-id sha256, so their token
+    # sets are pairwise disjoint
+    h = F.sha2(F.concat(F.lit("doc-"), F.col("id").cast("string")), 256)
+    unique_text = F.concat_ws(
+        " ", *[F.substring(h, 1 + 8 * i, 8) for i in range(8)]
+    )
+    docs = spark.range(n).select(
+        F.col("id").alias("doc_id"),
+        F.when(F.col("id") < n_dup, F.lit(boiler))
+        .otherwise(unique_text)
+        .alias("text"),
+    )
+    pairs = minhash_lsh_star_edges(docs, "text", "doc_id", num_hashes=12, bands=2)
+    reps = {
+        r.doc_id
+        for r in dedup_components(docs.select("doc_id"), pairs).collect()
+        if r.is_representative
+    }
+    assert reps == {0} | set(range(n_dup, n))
+
+
 def test_weighted_sssp_longer_hop_can_be_cheaper(spark):
     """The property BFS lacks: a 2-edge path (1+1=2) beats the direct
     1-edge cost-10 path, so the vertex must IMPROVE in round 2 and

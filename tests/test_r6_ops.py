@@ -301,6 +301,12 @@ def test_zorder_layout_tightens_all_dimensions(spark, tmp_path):
     # the worst file)
     assert zx < 0.5 and zy < 0.5, (zx, zy)
     assert zy < sy / 2  # z beats the single-column sort on the other dim
+    # a two-sided predicate reads the same rows from either layout
+    pred = F.col("x").between(10, 20) & F.col("y").between(30, 40)
+    n_pred = df.where(pred).count()
+    assert n_pred > 0
+    assert spark.read.parquet(zpath).where(pred).count() == n_pred
+    assert spark.read.parquet(spath).where(pred).count() == n_pred
 
     # key sanity: 2-dim interleave of equal ranks is monotone in rank
     k = zorder_key(

@@ -43,7 +43,7 @@ from datetime import date, datetime
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # override with STOCKPY_CHECK_SF_DIR to sweep other scales — sf0.001's
 # sparser distributions (more singleton groups, emptier joins) are the

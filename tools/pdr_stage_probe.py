@@ -29,7 +29,8 @@ sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
-from stockpy_spark.session import get_spark
+from perfbench.status import StatusReader  # noqa: E402
+from stockpy_spark.session import get_spark  # noqa: E402
 
 STAGES = [
     "salted",      # web-page fixture salt (narrow map + self-join)
@@ -54,19 +55,12 @@ def main() -> None:
     from stockpy_spark.registry import QUERIES
     from stockpy_spark.registry_r13 import release_stage_frames
 
+    reader = StatusReader(spark)
     # warm scans + JVM (not timed)
     QUERIES["a2_count_star"](spark, sf_dir).collect()
 
-    def shuffle_total() -> int:
-        store = spark.sparkContext._jsc.sc().statusStore()
-        empty = spark.sparkContext._jvm.java.util.ArrayList()
-        stages = store.stageList(
-            empty,
-            *[getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)]
-        )
-        return sum(
-            stages.apply(i).shuffleWriteBytes() for i in range(stages.size())
-        )
+    def shuffle_mb(mark) -> float:
+        return round(reader.window(mark).totals()["shuffle_write_mb"], 2)
 
     # per-pin attribution: the eager pins fire inside
     # release_stage_frames in pipeline order (clean, admitted6,
@@ -80,7 +74,7 @@ def main() -> None:
     real_pin = r13mod.pin
 
     def timed_pin(df):
-        w = shuffle_total()
+        mark = reader.mark()
         t = time.time()
         out = real_pin(df)
         pin_rows.append(
@@ -89,33 +83,32 @@ def main() -> None:
                 if len(pin_rows) < len(pin_names)
                 else f"pin_{len(pin_rows)}",
                 "wall_s": round(time.time() - t, 2),
-                "shuffle_mb": round((shuffle_total() - w) / 1e6, 2),
+                "shuffle_mb": shuffle_mb(mark),
             }
         )
         return out
 
+    mark = reader.mark()
     t0 = time.time()
-    w0 = shuffle_total()
     r13mod.pin = timed_pin
     try:
         frames = release_stage_frames(spark, sf_dir)
     finally:
         r13mod.pin = real_pin
-    w1 = shuffle_total()
     build = {
         "wall_s": round(time.time() - t0, 2),
-        "shuffle_mb": round((w1 - w0) / 1e6, 2),
+        "shuffle_mb": shuffle_mb(mark),
         "pins": pin_rows,
     }
 
     out = {}
     for name in STAGES:
-        w0 = shuffle_total()
+        mark = reader.mark()
         t0 = time.time()
         frames[name].write.format("noop").mode("overwrite").save()
         out[name] = {
             "wall_s": round(time.time() - t0, 2),
-            "shuffle_mb": round((shuffle_total() - w0) / 1e6, 2),
+            "shuffle_mb": shuffle_mb(mark),
         }
 
     print(

@@ -50,7 +50,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("STOCKPY_CHECK_SF_DIR", "/root/testdata/sf0.01")
 

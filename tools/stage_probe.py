@@ -1,10 +1,11 @@
 """Generic per-stage attribution for any registered query: run the
 query (noop sink) once warm + once measured, then dump every stage the
 measured run executed — wall (completion-submission), executor task
-time, task count, input/shuffle bytes — from the in-process
-AppStatusStore. This is the empirical half of guide §1: it tells you
-whether a query's wall is one fat single-task stage (serialized CPU),
-many tiny stages (scheduler/job overhead), or a genuine shuffle.
+time, task count, input/shuffle bytes — from the StatusReader window
+of the measured run (perfbench/status.py). This is the empirical half
+of guide §1: it tells you whether a query's wall is one fat single-task
+stage (serialized CPU), many tiny stages (scheduler/job overhead), or a
+genuine shuffle.
 
 Usage: python tools/stage_probe.py <query> [query ...]
        SPARK_GRAFT_SF_DIR overrides the data dir (default sf0.1).
@@ -20,70 +21,51 @@ sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
-from stockpy_spark.session import get_spark
+from perfbench.status import StatusReader  # noqa: E402
+from stockpy_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(
-        "stage_probe", extra_conf={"spark.ui.retainedStages": "100000"}
-    )
+    spark = get_spark("stage_probe")
     spark.sparkContext.setLogLevel("ERROR")
     from stockpy_spark.registry import QUERIES
 
+    reader = StatusReader(spark)
     # warm scans + JVM
     QUERIES["a2_count_star"](spark, sf_dir).collect()
-
-    store = spark.sparkContext._jsc.sc().statusStore()
-    empty = spark.sparkContext._jvm.java.util.ArrayList()
-
-    def stages():
-        lst = store.stageList(
-            empty,
-            *[getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)]
-        )
-        out = {}
-        for i in range(lst.size()):
-            sd = lst.apply(i)
-            out[(sd.stageId(), sd.attemptId())] = sd
-        return out
 
     for name in names:
         # warm run (plan compilation, broadcast warmup)
         df = QUERIES[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
-        seen = set(stages().keys())
+        mark = reader.mark()
         t0 = time.time()
         df = QUERIES[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         wall = time.time() - t0
+        window = reader.window(mark)
         rows = []
-        for key, sd in stages().items():
-            if key in seen:
-                continue
-            sub = sd.submissionTime()
-            com = sd.completionTime()
+        for sd in window.stages:
             stage_wall = 0.0
-            if sub.nonEmpty() and com.nonEmpty():
-                stage_wall = (
-                    com.get().getTime() - sub.get().getTime()
-                ) / 1000.0
+            if sd["submissionTime"] and sd["completionTime"]:
+                stage_wall = (sd["completionTime"] - sd["submissionTime"]) / 1e3
             rows.append(
                 (
-                    key[0],
+                    sd["stageId"],
                     stage_wall,
-                    sd.executorRunTime() / 1000.0,
-                    sd.numCompleteTasks(),
-                    sd.inputBytes() / 1e6,
-                    sd.shuffleReadBytes() / 1e6,
-                    sd.shuffleWriteBytes() / 1e6,
-                    (sd.description().get() if sd.description().nonEmpty()
-                     else sd.name())[:90],
+                    sd["executorRunTime"] / 1e3,
+                    sd["numCompleteTasks"],
+                    sd["inputBytes"] / 1e6,
+                    sd["shuffleReadBytes"] / 1e6,
+                    sd["shuffleWriteBytes"] / 1e6,
+                    (sd["description"] or sd["name"])[:90],
                 )
             )
         rows.sort(key=lambda r: -r[1])
-        print(f"\n=== {name}: wall {wall:.3f}s, {len(rows)} stages ===")
+        print(f"\n=== {name}: wall {wall:.3f}s, {len(rows)} stages"
+              f" ({window.evicted_stages} evicted) ===")
         print(f"{'stage':>6} {'wall_s':>7} {'task_s':>7} {'tasks':>5} "
               f"{'in_MB':>7} {'shR_MB':>7} {'shW_MB':>7}  name")
         for r in rows:

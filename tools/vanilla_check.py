@@ -18,9 +18,10 @@ Run it before a round ends: `python tools/vanilla_check.py [n]`
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import numpy as np
