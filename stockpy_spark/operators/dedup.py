@@ -14,10 +14,21 @@ Four tiers, all distributed, none driver-side:
 3. MinHash + LSH banding: the 100 TB discovery path. Deterministic
    md5-based minhash (portable across engines so the DuckDB oracle can
    replicate it bit-for-bit), banded into buckets; only same-bucket pairs
-   are candidates. Shuffle cost ~ H x tokens, candidate count bounded by
-   band collisions instead of n^2.
-4. SimHash: 32-bit fingerprints + hamming-distance pairs (bit_count of
-   xor). Cheapest per-doc state of the lot.
+   are candidates. Signatures are a zero-shuffle map; candidate count is
+   bounded by band collisions instead of n^2.
+4. SimHash: 32- and 64-bit fingerprints, signed map-side like MinHash,
+   + hamming-distance pairs (bit_count of xor). Cheapest per-doc state
+   of the lot.
+
+Every blocked pair search in tiers 3-4 (MinHash bands, SimHash bytes,
+and in other modules aHash bands and hyperplane-LSH bands) is one
+candidate-then-verify kernel: the caller builds one array of block
+keys per id, :func:`block_pairs` self-joins the blocks and emits each
+``(id_a, id_b)`` once, and the caller verifies each pair from the two
+key arrays (:func:`hamming_pairs`) or from a payload that
+:func:`verify_pairs` joins back once per side. Only ids and block keys
+cross the candidate join, however wide the payload (REPOSE-style
+filter-then-verify).
 
 All outputs are deterministic (min-doc-id keeper, d1<d2 pair ordering).
 """
@@ -50,15 +61,6 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     with_fp = df.withColumn("__fp", fingerprint_md5(text_col))
     keepers = with_fp.groupBy("__fp").agg(F.min(id_col).alias(id_col))
     return with_fp.join(keepers, ["__fp", id_col], "left_semi").drop("__fp")
-
-
-def _distinct_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Case-normalized distinct token set per document ('The' and 'the'
-    are the same evidence for near-dup purposes)."""
-    return df.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.array_distinct(tokenize(F.lower(F.col(text_col))))).alias("tok"),
-    )
 
 
 #: word_jaccard_pairs is verify-tier: its candidate join is quadratic
@@ -110,6 +112,96 @@ def _round6_pairs(sets: DataFrame, threshold: float) -> DataFrame:
             F.col("id_a").alias("d1"), F.col("id_b").alias("d2"), jac.alias("jaccard")
         )
         .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def block_pairs(keys: DataFrame) -> DataFrame:
+    """The candidate half of every blocked pair search: ``(id, keys)``,
+    one block key per array position, -> ``(id_a, id_b, keys_a,
+    keys_b)``, ``id_a < id_b``, for every two ids whose keys agree at
+    some position.
+
+    Each pair is emitted only by its FIRST agreeing block (the
+    zip_with test in the join condition), so pairs come out distinct
+    with no ``distinct`` shuffle. Only ids and block keys cross the
+    join; a verify that needs more than the keys joins its payload
+    back in :func:`verify_pairs`."""
+    blocks = keys.select("id", "keys", F.posexplode("keys").alias("blk", "key"))
+    a, b = blocks.alias("a"), blocks.alias("b")
+    first = F.array_position(
+        F.zip_with(F.col("a.keys"), F.col("b.keys"), lambda x, y: x == y), True
+    )
+    return a.join(
+        b,
+        (F.col("a.blk") == F.col("b.blk"))
+        & (F.col("a.key") == F.col("b.key"))
+        & (F.col("a.id") < F.col("b.id"))
+        & (first == F.col("a.blk") + 1),
+    ).select(
+        F.col("a.id").alias("id_a"),
+        F.col("b.id").alias("id_b"),
+        F.col("a.keys").alias("keys_a"),
+        F.col("b.keys").alias("keys_b"),
+    )
+
+
+def verify_pairs(pairs: DataFrame, payload: DataFrame) -> DataFrame:
+    """The verify half: joins ``payload`` ``(id, c, ...)`` once per side
+    of the distinct ``(id_a, id_b)`` candidates, as columns ``c_a`` and
+    ``c_b``, for the caller's verify expression. Both sides join the
+    same frame, so its exchange can be reused. No broadcast hint: the
+    payload is one row per id and grows with the corpus — AQE
+    broadcasts it while it fits."""
+    cols = [c for c in payload.columns if c != "id"]
+    a, b = payload.alias("a"), payload.alias("b")
+    return (
+        pairs.join(a, F.col("id_a") == F.col("a.id"))
+        .join(b, F.col("id_b") == F.col("b.id"))
+        .select(
+            "id_a",
+            "id_b",
+            *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for s in "ab" for c in cols],
+        )
+    )
+
+
+def hamming_pairs(
+    words: DataFrame, word_bits: int, block_bits: int, max_hamming: int
+) -> DataFrame:
+    """(d1, d2, hamming) with hamming <= max_hamming over fingerprints
+    carried as ``(id, w, ...)`` non-negative ``word_bits``-wide words.
+
+    Each word splits into ``block_bits``-wide blocks, and docs that
+    agree on any one block are candidates (:func:`block_pairs`). The
+    blocks tile every bit, so the verify needs only the two key arrays:
+    hamming = sum of bit_count(xor) over blocks. The pigeonhole makes
+    this lossless only while ``max_hamming < n_blocks``: that many
+    flipped bits cannot touch every block. Past it pairs would be
+    silently lost, so it raises ValueError instead.
+    """
+    cols = [c for c in words.columns if c != "id"]
+    per_word = word_bits // block_bits
+    n_blocks = per_word * len(cols)
+    if max_hamming >= n_blocks:
+        raise ValueError(
+            f"{n_blocks}-block pigeonhole is lossless only for "
+            f"max_hamming <= {n_blocks - 1}, got {max_hamming}"
+        )
+    blocks = [
+        F.shiftright(F.col(c), j * block_bits).bitwiseAND(F.lit((1 << block_bits) - 1))
+        for c in cols
+        for j in range(per_word)
+    ]
+    keys = words.select("id", F.array(*blocks).alias("keys"))
+    hamming = F.aggregate(
+        F.zip_with("keys_a", "keys_b", lambda x, y: F.bit_count(x.bitwiseXOR(y))),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    )
+    return (
+        block_pairs(keys)
+        .select(F.col("id_a").alias("d1"), F.col("id_b").alias("d2"), hamming.alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
     )
 
 
@@ -244,52 +336,35 @@ def ngram_jaccard_pairs(
     return _round6_pairs(sets, threshold)
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 12,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """(doc, h, mh): long-form minhash signature (see _minhash_wide).
-    The explode happens AFTER the aggregate, so it is n_docs x H rows,
-    not n_tokens x H."""
-    wide = _minhash_wide(df, text_col, id_col, num_hashes, hash_fn)
-    pairs = F.array(
-        *[
-            F.struct(F.lit(h).cast("int").alias("h"), F.col(f"mh{h}").alias("mh"))
-            for h in range(num_hashes)
-        ]
-    )
-    return wide.select("doc", F.explode(pairs).alias("kv")).select(
-        "doc", F.col("kv.h").alias("h"), F.col("kv.mh").alias("mh")
-    )
+def _band_keys(num_hashes: int, bands: int, hash_fn: str) -> list[F.Column]:
+    """One band-signature column per band of a wide minhash frame: the
+    kernel's hash of the band's minhashes in h order, each prefixed
+    with a zero-padded h (identical string to sorting 'hhhh:mh' entries
+    lexicographically — the oracle's formulation)."""
+    _, bsig_fn, _ = _hash_kernel(hash_fn)
+    rows = num_hashes // bands
+    return [
+        bsig_fn(
+            F.concat_ws(
+                ",",
+                *[
+                    F.concat(F.lit(f"{h:04d}:"), F.col(f"mh{h}").cast("string"))
+                    for h in range(b * rows, (b + 1) * rows)
+                ],
+            )
+        )
+        for b in range(bands)
+    ]
 
 
 def _band_signatures(
     wide: DataFrame, num_hashes: int, bands: int, hash_fn: str = "md5"
 ) -> DataFrame:
-    """(doc, band, bsig) from a wide minhash frame. Band signature =
-    the kernel's hash of the band's minhashes in h order, each prefixed
-    with a zero-padded h (identical string to sorting 'hhhh:mh' entries
-    lexicographically — the oracle's formulation). Columnar explode of
-    the aggregate — no extra shuffle."""
-    _, bsig_fn, _ = _hash_kernel(hash_fn)
-    rows = num_hashes // bands
+    """(doc, band, bsig) from a wide minhash frame (_band_keys).
+    Columnar explode of the aggregate — no extra shuffle."""
     band_structs = [
-        F.struct(
-            F.lit(b).cast("int").alias("band"),
-            bsig_fn(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.concat(F.lit(f"{h:04d}:"), F.col(f"mh{h}").cast("string"))
-                        for h in range(b * rows, (b + 1) * rows)
-                    ],
-                )
-            ).alias("bsig"),
-        )
-        for b in range(bands)
+        F.struct(F.lit(b).cast("int").alias("band"), key.alias("bsig"))
+        for b, key in enumerate(_band_keys(num_hashes, bands, hash_fn))
     ]
     return wide.select("doc", F.explode(F.array(*band_structs)).alias("kb")).select(
         "doc", F.col("kb.band").alias("band"), F.col("kb.bsig").alias("bsig")
@@ -308,58 +383,48 @@ def minhash_lsh_pairs(
     minhash-estimated Jaccard attached.
 
     Pipeline: minhash signatures -> band signature per (doc, band) =
-    md5 of the band's ordered minhashes -> bucket-join docs sharing a
-    band signature -> distinct candidate pairs -> estimated jaccard =
-    fraction of the full signature agreeing.
+    md5 of the band's ordered minhashes -> :func:`block_pairs` on
+    (band, band signature) -> distinct candidate pairs -> estimated
+    jaccard = fraction of the full signature agreeing.
 
-    Scale behavior: ONE token shuffle (the groupBy(doc) minhash
-    aggregate, map-side combined); band signatures and the per-doc
-    signature array are columnar derivations of that single aggregate —
-    no further shuffles until the bounded bucket-join. Skewed buckets
-    (boilerplate docs) are the one hazard — AQE skew-join handles
-    moderate skew; severe boilerplate should be exact-deduped (cheap)
-    before LSH.
+    Scale behavior: signatures are the zero-shuffle map of
+    _minhash_wide; band signatures and the per-doc signature array are
+    columnar derivations of it, so the first shuffle is the bounded
+    bucket join. Skewed buckets (boilerplate docs) are the one hazard —
+    AQE skew-join handles moderate skew; severe boilerplate should be
+    exact-deduped (cheap) before LSH.
     """
     wide = _minhash_wide(df, text_col, id_col, num_hashes, hash_fn)
-    band_sigs = _band_signatures(wide, num_hashes, bands, hash_fn)
-    a, b = band_sigs.alias("a"), band_sigs.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bsig") == F.col("b.bsig"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("d1"), F.col("b.doc").alias("d2"))
-        .distinct()
+    keys = wide.select(
+        F.col("doc").alias("id"),
+        F.array(*_band_keys(num_hashes, bands, hash_fn)).alias("keys"),
     )
-    # estimated jaccard via per-doc signature ARRAYS: one row per doc,
-    # one zip_with per candidate pair — instead of re-joining H minhash
-    # rows per pair side (H x pairs rows through the shuffle)
-    sig_arr = wide.select(
-        "doc", F.array(*[F.col(f"mh{h}") for h in range(num_hashes)]).alias("sig")
+    return verify_pairs(block_pairs(keys), _signature_array(wide, num_hashes)).select(
+        F.col("id_a").alias("d1"),
+        F.col("id_b").alias("d2"),
+        _lane_agreement(F.col("sig_a"), F.col("sig_b"), num_hashes).alias("est_jaccard"),
     )
-    s1 = sig_arr.select(F.col("doc").alias("d1"), F.col("sig").alias("sig1"))
-    s2 = sig_arr.select(F.col("doc").alias("d2"), F.col("sig").alias("sig2"))
+
+
+def _signature_array(wide: DataFrame, num_hashes: int) -> DataFrame:
+    """(id, sig): one signature ARRAY per doc of a wide minhash frame,
+    so lane agreement is one zip_with per candidate pair instead of H
+    minhash rows per pair side through the shuffle."""
+    return wide.select(
+        F.col("doc").alias("id"),
+        F.array(*[F.col(f"mh{h}") for h in range(num_hashes)]).alias("sig"),
+    )
+
+
+def _lane_agreement(sig1: F.Column, sig2: F.Column, num_hashes: int) -> F.Column:
+    """Estimated Jaccard: the fraction of agreeing minhash lanes of two
+    signature arrays, rounded to 6 decimals."""
     agree = F.aggregate(
-        F.zip_with(
-            F.col("sig1"),
-            F.col("sig2"),
-            lambda a, b: F.when(a == b, 1.0).otherwise(0.0),
-        ),
+        F.zip_with(sig1, sig2, lambda a, b: F.when(a == b, 1.0).otherwise(0.0)),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    # no broadcast hint: the signature table is one row per doc and
-    # grows with the corpus — AQE broadcasts it while it fits, falls
-    # back to a shuffle join beyond that
-    return (
-        cand.join(s1, "d1")
-        .join(s2, "d2")
-        .select(
-            "d1", "d2", F.round(agree / F.lit(float(num_hashes)), 6).alias("est_jaccard")
-        )
-    )
+    return F.round(agree / F.lit(float(num_hashes)), 6)
 
 
 def minhash_dedup_assign(
@@ -426,79 +491,76 @@ def minhash_dedup_assign(
     )
 
 
+def _simhash(
+    df: DataFrame, text_col: str, id_col: str, words: dict[str, int], bits: int = 32
+) -> DataFrame:
+    """(id_col, *words): SimHash over each document's distinct
+    lowercase tokens, one ``bits``-wide BIGINT word per entry of
+    ``words`` (output column -> 1-based start of the 8 md5 hex chars
+    that give each token its 32-bit hash). Word bit b is set iff more
+    than half the tokens have bit b set (the sign of the +-1 sum).
+
+    ZERO-shuffle, like _minhash_wide: the token set never leaves its
+    row; each word bit is an ``aggregate`` over the row's token-hash
+    array. Tokenless docs have no row.
+    """
+    toks = df.select(
+        F.col(id_col),
+        F.array_distinct(tokenize(F.lower(F.col(text_col)))).alias("__toks"),
+    ).filter(F.size(F.col("__toks")) > 0)
+    hashed = toks.select(
+        id_col,
+        F.size(F.col("__toks")).alias("__n"),
+        *[
+            F.transform(
+                F.col("__toks"),
+                lambda t: F.conv(F.substring(F.md5(t), start, 8), 16, 10).cast("long"),
+            ).alias(f"__h{start}")
+            for start in words.values()
+        ],
+    )
+
+    def fold(start: int) -> F.Column:
+        fp = F.lit(0).cast("long")
+        for b in range(bits):
+            ones = F.aggregate(
+                F.col(f"__h{start}"),
+                F.lit(0).cast("long"),
+                lambda acc, h: acc + F.shiftright(h, b).bitwiseAND(F.lit(1)),
+            )
+            fp = fp + F.when(2 * ones > F.col("__n"), F.lit(1 << b).cast("long")).otherwise(
+                F.lit(0).cast("long")
+            )
+        return fp
+
+    return hashed.select(id_col, *[fold(start).alias(w) for w, start in words.items()])
+
+
 def simhash_fingerprints(
     df: DataFrame, text_col: str, id_col: str, bits: int = 32
 ) -> DataFrame:
-    """(id, simhash): 32-bit SimHash over distinct tokens.
+    """(id, simhash): 32-bit SimHash over distinct tokens (_simhash).
 
     Token hash = first 8 hex chars of md5 (portable); fingerprint bit b
     is the sign of sum over tokens of (+1 if token-hash bit b else -1).
     """
-    toks = _distinct_tokens(df, text_col, id_col)
-    th = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
-    toks = toks.withColumn("th", th)
-    bit_sums = [
-        F.sum(
-            F.when(F.shiftright(F.col("th"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"s{b}")
-        for b in range(bits)
-    ]
-    agg = toks.groupBy("doc").agg(*bit_sums)
-    fp = None
-    for b in range(bits):
-        term = F.when(F.col(f"s{b}") > 0, F.lit(2**b).cast("long")).otherwise(F.lit(0).cast("long"))
-        fp = term if fp is None else fp + term
-    return agg.select(F.col("doc").alias(id_col), fp.alias("simhash"))
+    return _simhash(df, text_col, id_col, {"simhash": 1}, bits)
 
 
 def simhash_pairs(
     df: DataFrame, text_col: str, id_col: str, max_hamming: int = 3
 ) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance <= max_hamming.
-
-    Blocked self-join: docs are bucketed by each of 4 simhash bytes; a
-    pair within hamming<=3 of a 32-bit hash must agree on >=1 of the 4
-    bytes (pigeonhole), so the join only compares same-byte-block pairs
-    instead of n^2.
-    """
-    fps = simhash_fingerprints(df, text_col, id_col)
-    blocks = fps.select(
-        F.col(id_col).alias("doc"),
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("blk"),
-                        F.shiftright(F.col("simhash"), i * 8).bitwiseAND(F.lit(255)).alias("bv"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("kb"),
-    ).select("doc", "simhash", F.col("kb.blk").alias("blk"), F.col("kb.bv").alias("bv"))
-    a, b = blocks.alias("a"), blocks.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("d1"),
-            F.col("b.doc").alias("d2"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    """Near-dup pairs (d1, d2, hamming) by SimHash hamming distance <=
+    max_hamming, through :func:`hamming_pairs` on the 4 simhash bytes:
+    lossless for max_hamming <= 3, ValueError above."""
+    fps = simhash_fingerprints(df, text_col, id_col).withColumnRenamed(id_col, "id")
+    return hamming_pairs(fps, 32, 8, max_hamming)
 
 
 def simhash64_fingerprints(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, sim_hi, sim_lo): 64-bit SimHash carried as two non-negative
     32-bit halves (lo = bits 0-31 from md5 hex chars 1-8 of each token,
-    hi = bits 32-63 from chars 9-16).
+    hi = bits 32-63 from chars 9-16), both from one _simhash pass.
 
     Why halves instead of one long: the sign bit of a 64-bit value
     needs two's-complement arithmetic that SQL engines check/overflow
@@ -508,82 +570,19 @@ def simhash64_fingerprints(df: DataFrame, text_col: str, id_col: str) -> DataFra
     (birthday collisions flood the hamming<=3 blocks past ~10^5 docs);
     2^64 keeps block buckets cold at 100 TB.
     """
-    toks = _distinct_tokens(df, text_col, id_col)
-    toks = toks.withColumn(
-        "tlo", F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
-    ).withColumn(
-        "thi", F.conv(F.substring(F.md5("tok"), 9, 8), 16, 10).cast("long")
-    )
-    sums = []
-    for half in ("lo", "hi"):
-        for b in range(32):
-            sums.append(
-                F.sum(
-                    F.when(
-                        F.shiftright(F.col(f"t{half}"), b).bitwiseAND(F.lit(1)) == 1, 1
-                    ).otherwise(-1)
-                ).alias(f"{half}{b}")
-            )
-    agg = toks.groupBy("doc").agg(*sums)
-
-    def fold(half: str) -> F.Column:
-        fp = F.lit(0).cast("long")
-        for b in range(32):
-            fp = fp + F.when(
-                F.col(f"{half}{b}") > 0, F.lit(2**b).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-        return fp
-
-    return agg.select(
-        F.col("doc").alias(id_col), fold("hi").alias("sim_hi"), fold("lo").alias("sim_lo")
-    )
+    return _simhash(df, text_col, id_col, {"sim_hi": 9, "sim_lo": 1})
 
 
 def simhash64_pairs(
     df: DataFrame, text_col: str, id_col: str, max_hamming: int = 3
 ) -> DataFrame:
-    """Near-dup pairs by 64-bit SimHash hamming distance <= max_hamming.
-
-    8-byte-block pigeonhole: <= 3 flipped bits damage <= 3 of the 8
-    byte blocks, so any qualifying pair agrees on >= 5 blocks and is
-    found by single-block equality blocking — lossless vs the
-    brute-force scan, same argument as the 32-bit variant, at 2^64
-    fingerprint sparsity.
+    """Near-dup pairs (d1, d2, hamming) by 64-bit SimHash hamming
+    distance <= max_hamming, through :func:`hamming_pairs` on the 8
+    bytes of the two halves: lossless for max_hamming <= 7 (that many
+    flipped bits leave >= 1 of 8 blocks intact), ValueError above.
     """
-    fps = simhash64_fingerprints(df, text_col, id_col)
-    block_structs = [
-        F.struct(
-            F.lit(i + 4 * h).alias("blk"),
-            F.shiftright(F.col(col), i * 8).bitwiseAND(F.lit(255)).alias("bv"),
-        )
-        for h, col in enumerate(("sim_lo", "sim_hi"))
-        for i in range(4)
-    ]
-    blocks = fps.select(
-        F.col(id_col).alias("doc"),
-        "sim_hi",
-        "sim_lo",
-        F.explode(F.array(*block_structs)).alias("kb"),
-    ).select("doc", "sim_hi", "sim_lo", F.col("kb.blk").alias("blk"), F.col("kb.bv").alias("bv"))
-    a, b = blocks.alias("a"), blocks.alias("b")
-    hamming = F.bit_count(
-        F.col("a.sim_hi").bitwiseXOR(F.col("b.sim_hi"))
-    ) + F.bit_count(F.col("a.sim_lo").bitwiseXOR(F.col("b.sim_lo")))
-    return (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("d1"),
-            F.col("b.doc").alias("d2"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    fps = simhash64_fingerprints(df, text_col, id_col).withColumnRenamed(id_col, "id")
+    return hamming_pairs(fps, 32, 8, max_hamming)
 
 
 def embedding_neardup_lsh(
@@ -596,62 +595,45 @@ def embedding_neardup_lsh(
     bands: int = 3,
 ) -> DataFrame:
     """Embedding near-dup at scale: hyperplane-LSH blocking + exact
-    cosine verify within blocks. Returns (id1, id2, cosine), id1 < id2,
-    cosine >= threshold.
+    cosine verify. Returns (id1, id2, cosine), id1 < id2, cosine >=
+    threshold.
 
     The n_planes-bit signature is split into ``bands`` sub-signatures;
     vectors sharing ANY band sub-signature become a candidate pair
     (same banding logic as MinHash-LSH, hyperplanes instead of
-    minhashes). One linear scan computes signatures; the self-join is
-    per-band on small keys; exact cosine runs only on candidates —
-    O(n^2) never materializes unless the data really is one cluster.
-    High-cosine pairs agree on most hyperplane signs, so P(all bands
-    differ) decays geometrically with bands.
+    minhashes). One linear scan computes signatures; :func:`block_pairs`
+    joins ids only on small (band, sub-signature) keys, and the vectors
+    join back once per side for the exact cosine — O(n^2) never
+    materializes unless the data really is one cluster. High-cosine
+    pairs agree on most hyperplane signs, so P(all bands differ)
+    decays geometrically with bands.
     """
     from stockpy_spark.functions.text import cosine_similarity
     from stockpy_spark.operators.similarity import _hyperplane_signature
 
     width = n_planes // bands
-    sig = _hyperplane_signature(F.col(vec_col), dim, n_planes)
-    tagged = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), sig.alias("sig")
+    sigs = df.select(
+        F.col(id_col).alias("id"),
+        _hyperplane_signature(F.col(vec_col), dim, n_planes).alias("sig"),
     )
-    bexpr = F.explode(
+    keys = sigs.select(
+        "id",
         F.array(
             *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftright(F.col("sig"), b * width)
-                    .bitwiseAND(F.lit((1 << width) - 1))
-                    .alias("bsig"),
-                )
+                F.shiftright(F.col("sig"), b * width).bitwiseAND(F.lit((1 << width) - 1))
                 for b in range(bands)
             ]
-        )
+        ).alias("keys"),
     )
-    blocks = tagged.select("id", "v", bexpr.alias("kb")).select(
-        "id", "v", F.col("kb.band").alias("band"), F.col("kb.bsig").alias("bsig")
-    )
-    a, b = blocks.alias("a"), blocks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bsig") == F.col("b.bsig"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id1"),
-            F.col("b.id").alias("id2"),
-            F.col("a.v").alias("v1"),
-            F.col("b.v").alias("v2"),
-        )
-        .dropDuplicates(["id1", "id2"])
-    )
+    payload = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     return (
-        cand.withColumn("cosine", F.round(cosine_similarity("v1", "v2"), 6))
+        verify_pairs(block_pairs(keys), payload)
+        .select(
+            F.col("id_a").alias("id1"),
+            F.col("id_b").alias("id2"),
+            F.round(cosine_similarity("v_a", "v_b"), 6).alias("cosine"),
+        )
         .filter(F.col("cosine") >= threshold)
-        .select("id1", "id2", "cosine")
     )
 
 

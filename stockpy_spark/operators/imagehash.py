@@ -20,14 +20,16 @@ is integer arithmetic —
 - the 64 bits pack row-major into four 16-bit band keys ``b0..b3``.
 
 Scale shape: hashing is a narrow Arrow-batched ``mapInPandas`` pass
-(payload bytes never visit the driver); pairing is the same 16-bit
-band pigeonhole as ``dedup.simhash64_pairs`` — hamming distance <= 3
-flips at most 3 of the 4 bands, so any qualifying pair agrees on >= 1
-band and is found by band-equality blocking (an equi-join on small
-keys), lossless vs the brute-force cross join that never materializes.
-At 100 TB the hash pass scales with scan bandwidth and the join
-shuffles only (id, 4 ints) per image — pair candidates are confined to
-band buckets exactly like MinHash-LSH.
+(payload bytes never visit the driver); pairing is
+``dedup.hamming_pairs`` over the four 16-bit band words — the same
+candidate-then-verify kernel as SimHash, with each band one block.
+Hamming distance <= 3 flips at most 3 of the 4 bands, so any
+qualifying pair agrees on >= 1 band and is found by band-equality
+blocking (an equi-join on small keys), lossless vs the brute-force
+cross join that never materializes. At 100 TB the hash pass scales
+with scan bandwidth and the candidate join shuffles only (id, band,
+key) — pair candidates are confined to band buckets exactly like
+MinHash-LSH.
 """
 
 from __future__ import annotations
@@ -40,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from stockpy_spark.operators.dedup import hamming_pairs
 from stockpy_spark.operators.multimodal import _decode_pixels
 
 AHASH_SCHEMA = T.StructType(
@@ -96,47 +99,12 @@ def perceptual_ahash(assets: DataFrame, grid: int = 8) -> DataFrame:
 
 
 def ahash_near_pairs(hashes: DataFrame, max_hamming: int = 2) -> DataFrame:
-    """Near-duplicate image pairs (d1 < d2, hamming <= max_hamming)
-    from a ``perceptual_ahash`` frame, by 16-bit band pigeonhole
-    blocking (requires max_hamming <= 3 for losslessness: 4 bands,
-    <= 3 damaged => >= 1 equal)."""
-    if max_hamming > 3:
-        raise ValueError("band pigeonhole is lossless only for max_hamming <= 3")
-    bands = hashes.select(
-        F.col("doc_id").alias("doc"),
-        "b0",
-        "b1",
-        "b2",
-        "b3",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(i).alias("band"), F.col(f"b{i}").alias("bv"))
-                    for i in range(4)
-                ]
-            )
-        ).alias("kb"),
-    ).select("doc", "b0", "b1", "b2", "b3", "kb.band", "kb.bv")
-    a, b = bands.alias("a"), bands.alias("b")
-    hamming = sum(
-        F.bit_count(F.col(f"a.b{i}").bitwiseXOR(F.col(f"b.b{i}")))
-        for i in range(4)
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("d1"),
-            F.col("b.doc").alias("d2"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    """Near-duplicate image pairs (d1, d2, hamming), d1 < d2, hamming <=
+    max_hamming, from a ``perceptual_ahash`` frame by 16-bit band
+    pigeonhole blocking (``dedup.hamming_pairs``: lossless for
+    max_hamming <= 3 with 4 bands, ValueError above)."""
+    words = hashes.select(F.col("doc_id").alias("id"), "b0", "b1", "b2", "b3")
+    return hamming_pairs(words, 16, 16, max_hamming)
 
 
 def ahash_dedup_components(

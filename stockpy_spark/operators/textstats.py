@@ -899,15 +899,21 @@ def fuzzy_decontamination(
     candidate (the certified-clean rows a decontamination report must
     include).
 
-    Scale shape, inherited from minhash_lsh_pairs: signatures are the
-    ZERO-shuffle narrow map (_minhash_wide), the band join is
+    Scale shape: signatures are the ZERO-shuffle narrow map
+    (_minhash_wide); the band join is two-sided, eval x corpus, and
     eval-side-tiny (an eval suite is KB against a 100 TB corpus — AQE
-    broadcasts the eval buckets), lane comparison joins the n_docs-
-    sized signature table only for candidate pairs, and the final
-    aggregate is per-eval-doc. ``hash_fn="xxhash64"`` swaps the
-    production kernel exactly as in the dedup family.
+    broadcasts the eval buckets); each candidate pair joins one
+    signature ARRAY per side and scores it with the lane agreement
+    minhash_lsh_pairs uses; the final aggregate is per-eval-doc.
+    ``hash_fn="xxhash64"`` swaps the production kernel exactly as in
+    the dedup family.
     """
-    from stockpy_spark.operators.dedup import _band_signatures, _minhash_wide
+    from stockpy_spark.operators.dedup import (
+        _band_signatures,
+        _lane_agreement,
+        _minhash_wide,
+        _signature_array,
+    )
 
     cw = _minhash_wide(corpus, text_col, id_col, num_hashes, hash_fn)
     ew = _minhash_wide(eval_df, text_col, id_col, num_hashes, hash_fn)
@@ -918,25 +924,12 @@ def fuzzy_decontamination(
         F.col("doc").alias("edoc"), "band", "bsig"
     )
     cand = eb.join(cb, ["band", "bsig"]).select("edoc", "cdoc").distinct()
-
-    es = _long_sig(ew).select(
-        F.col("doc").alias("edoc"), "h", F.col("mh").alias("emh")
-    )
-    cs = _long_sig(cw).select(
-        F.col("doc").alias("cdoc"), "h", F.col("mh").alias("cmh")
-    )
-    est = (
-        cand.join(es, "edoc")
-        .join(cs, ["cdoc", "h"])
-        .groupBy("edoc", "cdoc")
-        .agg(
-            F.round(
-                F.avg(
-                    F.when(F.col("emh") == F.col("cmh"), 1.0).otherwise(0.0)
-                ),
-                6,
-            ).alias("est_jaccard")
-        )
+    es = _signature_array(ew, num_hashes).toDF("edoc", "esig")
+    cs = _signature_array(cw, num_hashes).toDF("cdoc", "csig")
+    est = cand.join(es, "edoc").join(cs, "cdoc").select(
+        "edoc",
+        "cdoc",
+        _lane_agreement(F.col("esig"), F.col("csig"), num_hashes).alias("est_jaccard"),
     )
     per_eval = est.groupBy("edoc").agg(
         F.count(F.lit(1)).alias("n_candidates"),
@@ -961,19 +954,4 @@ def fuzzy_decontamination(
                 "is_contaminated"
             ),
         )
-    )
-
-
-def _long_sig(wide: DataFrame) -> DataFrame:
-    """(doc, h, mh) long form of a wide minhash frame (helper shared by
-    fuzzy_decontamination's two sides)."""
-    num = len([c for c in wide.columns if c.startswith("mh")])
-    pairs = F.array(
-        *[
-            F.struct(F.lit(h).cast("int").alias("h"), F.col(f"mh{h}").alias("mh"))
-            for h in range(num)
-        ]
-    )
-    return wide.select("doc", F.explode(pairs).alias("kv")).select(
-        "doc", F.col("kv.h").alias("h"), F.col("kv.mh").alias("mh")
     )

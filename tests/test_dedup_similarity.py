@@ -4,6 +4,7 @@ on real testdata."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from stockpy_spark.operators.dedup import (
@@ -127,9 +128,14 @@ def test_simhash_near_dup_distance(spark):
     ham_14 = bin(fps[1] ^ fps[4]).count("1")
     assert ham_13 < ham_14  # near-dup closer than unrelated
 
+    # 3 is the 4-byte pigeonhole's lossless bound (ham_13 is 6 here)
     pairs = {(r.d1, r.d2) for r in
-             simhash_pairs(_docs(spark), "text", "doc_id", max_hamming=ham_13).collect()}
-    assert (1, 2) in pairs and (1, 3) in pairs
+             simhash_pairs(_docs(spark), "text", "doc_id", max_hamming=3).collect()}
+    assert (1, 2) in pairs
+    assert pairs == {
+        (a, b) for a in fps for b in fps
+        if a < b and bin(fps[a] ^ fps[b]).count("1") <= 3
+    }
 
 
 def test_embedding_cosine_pairs(spark):
@@ -260,44 +266,106 @@ def test_tfidf_textbook_values(spark):
     assert {(r.doc, r.term) for r in top} == {(1, "apple"), (2, "banana"), (3, "durian")}
 
 
-def test_simhash64_blocked_equals_bruteforce(spark):
-    """The 8-byte-block pigeonhole must be lossless at hamming<=3:
-    blocked pairs == brute-force pairs over the same fingerprints."""
-    from pyspark.sql import functions as F
-
+def _hamming_join(spark, sf_dir, name):
+    """(n_blocks, pairs(max_hamming), fingerprint words) of one blocked
+    hamming join over the test-scale documents."""
     from stockpy_spark.operators.dedup import (
         simhash64_fingerprints,
         simhash64_pairs,
     )
+    from stockpy_spark.operators.imagehash import ahash_near_pairs, perceptual_ahash
+    from stockpy_spark.operators.multimodal import attach_bmp_payload
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    blocked = {
-        (r.d1, r.d2, r.hamming)
-        for r in simhash64_pairs(docs, "text", "doc_id", max_hamming=3).collect()
-    }
-    fps = simhash64_fingerprints(docs, "text", "doc_id")
-    a, b = fps.alias("a"), fps.alias("b")
-    ham = F.bit_count(
-        F.col("a.sim_hi").bitwiseXOR(F.col("b.sim_hi"))
-    ) + F.bit_count(F.col("a.sim_lo").bitwiseXOR(F.col("b.sim_lo")))
-    brute = {
-        (r.d1, r.d2, r.hamming)
-        for r in a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("d1"),
-            F.col("b.doc_id").alias("d2"),
-            ham.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= 3)
-        .collect()
-    }
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    if name == "simhash32":
+        fps = simhash_fingerprints(docs, "text", "doc_id")
+        return 4, lambda h: simhash_pairs(docs, "text", "doc_id", h), fps
+    if name == "simhash64":
+        fps = simhash64_fingerprints(docs, "text", "doc_id")
+        return 8, lambda h: simhash64_pairs(docs, "text", "doc_id", h), fps
+    hashes = perceptual_ahash(attach_bmp_payload(docs.select("doc_id"), "doc_id"))
+    return 4, lambda h: ahash_near_pairs(hashes, h), hashes
+
+
+@pytest.mark.parametrize("name", ["simhash32", "simhash64", "ahash"])
+def test_hamming_join_blocked_equals_bruteforce(spark, sf_dir, name):
+    """Each block pigeonhole (dedup.hamming_pairs) is lossless at its
+    bound, max_hamming = n_blocks - 1: blocked pairs == a pure-Python
+    all-pairs scan over the same fingerprint words. One more bit would
+    let a pair differ in every block, so that raises instead."""
+    n_blocks, pairs, fps = _hamming_join(spark, sf_dir, name)
+    bound = n_blocks - 1
+    rows = pairs(bound).collect()
+    blocked = {(r.d1, r.d2, r.hamming) for r in rows}
+    assert len(blocked) == len(rows)  # each pair once
+    words = sorted(tuple(r) for r in fps.collect())
+    # fingerprint words stay unsigned and at most 32 bits (portability)
+    assert all(0 <= w < 2**32 for row in words for w in row[1:])
+    brute = set()
+    for i, (a, *wa) in enumerate(words):
+        for b, *wb in words[i + 1 :]:
+            ham = sum(bin(x ^ y).count("1") for x, y in zip(wa, wb))
+            if ham <= bound:
+                brute.add((a, b, ham))
     assert blocked == brute and len(blocked) > 0
-    # halves stay inside unsigned-32 range (portability invariant)
-    row = fps.agg(
-        F.max("sim_hi").alias("mh"), F.min("sim_hi").alias("nh"),
-        F.max("sim_lo").alias("ml"), F.min("sim_lo").alias("nl"),
-    ).collect()[0]
-    assert 0 <= row.nh and row.mh < 2**32 and 0 <= row.nl and row.ml < 2**32
+    with pytest.raises(ValueError, match="pigeonhole"):
+        pairs(n_blocks)
+
+
+def test_embedding_lsh_matches_python_reference(spark, sf_dir):
+    """embedding_neardup_lsh == a pure-Python replay of its contract:
+    pairs sharing any band sub-signature (signatures collected from
+    Spark), verified by cosine rounded half-up to 6 places >= t."""
+    import math
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from stockpy_spark.operators.dedup import embedding_neardup_lsh
+    from stockpy_spark.operators.similarity import _hyperplane_signature
+
+    t, n_planes, bands = 0.4, 12, 3
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    out = embedding_neardup_lsh(
+        emb, "embedding", "vec_id", t, dim=64, n_planes=n_planes, bands=bands
+    ).collect()
+    got = {(r.id1, r.id2, r.cosine) for r in out}
+    assert len(got) == len(out)  # each pair once
+    rows = emb.select(
+        "vec_id",
+        "embedding",
+        _hyperplane_signature(F.col("embedding"), 64, n_planes).alias("sig"),
+    ).collect()
+    width = n_planes // bands
+    buckets = {}
+    for r in rows:
+        for b in range(bands):
+            key = (b, (r.sig >> (b * width)) & ((1 << width) - 1))
+            buckets.setdefault(key, []).append(r.vec_id)
+    cand = {
+        (min(x, y), max(x, y))
+        for ids in buckets.values()
+        for x in ids
+        for y in ids
+        if x != y
+    }
+    vec = {r.vec_id: [float(x) for x in r.embedding] for r in rows}
+
+    def fold(xs):
+        acc = 0.0
+        for x in xs:
+            acc += x
+        return acc
+
+    want = set()
+    for a, b in cand:
+        va, vb = vec[a], vec[b]
+        den = math.sqrt(fold(x * x for x in va)) * math.sqrt(fold(x * x for x in vb))
+        if den == 0.0:
+            continue
+        cos = fold(x * y for x, y in zip(va, vb)) / den
+        cos = float(Decimal(repr(cos)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+        if cos >= t:
+            want.add((a, b, cos))
+    assert got == want and len(got) > 0
 
 
 def test_semantic_dedup_prunes_within_cluster_only(spark):

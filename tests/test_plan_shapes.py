@@ -176,6 +176,21 @@ def test_minhash_signatures_no_exchange(spark):
     assert "Exchange" not in p
 
 
+def test_simhash_fingerprints_no_exchange(spark):
+    # both SimHash widths sign each document map-side (dedup._simhash)
+    from stockpy_spark.operators.dedup import (
+        simhash64_fingerprints,
+        simhash_fingerprints,
+    )
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    for fps in (
+        simhash_fingerprints(docs, "text", "doc_id"),
+        simhash64_fingerprints(docs, "text", "doc_id"),
+    ):
+        assert "Exchange" not in plan(fps)
+
+
 def test_ann_lsh_candidates_equi_join_not_nested_loop(spark):
     # multi-probe LSH: queries explode into their hamming-ball probe
     # signatures and equi-join on csig — a hash join. A
