@@ -12,6 +12,7 @@ from stockpy_spark.sources.writers import (
 )
 from stockpy_spark.sources.catalog import (
     add_partition,
+    add_partitions,
     analyze_table,
     create_database,
     create_external_table,
@@ -31,6 +32,7 @@ __all__ = [
     "compact_to_target_files",
     "write_sorted_for_pruning",
     "add_partition",
+    "add_partitions",
     "analyze_table",
     "create_database",
     "create_external_table",

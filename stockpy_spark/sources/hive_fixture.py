@@ -103,8 +103,8 @@ def run_incremental_cycle(
     partition-overwrite write per day, a RERUN of one day to prove
     partition-level idempotence (the reference's append layout
     duplicates on rerun — extract_stocks_job.py:375-393 logs the bug;
-    we fix it), per-day O(1) partition registration instead of an MSCK
-    crawl, and a catalog read back with a partition predicate.
+    we fix it), one O(1) registration DDL for all days instead of an
+    MSCK crawl, and a catalog read back with a partition predicate.
 
     Returns the catalog-backed DataFrame filtered to ``days`` — callers
     aggregate it; the oracle twin is the flat events table restricted to
@@ -112,13 +112,12 @@ def run_incremental_cycle(
     hash.
     """
     from stockpy_spark.sources.catalog import (
-        add_partition,
+        add_partitions,
         create_external_table,
     )
 
     base = incremental_path(sf_dir)
     shutil.rmtree(base, ignore_errors=True)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     ev = events_with_dataproc(spark, sf_dir)
 
@@ -137,7 +136,6 @@ def run_incremental_cycle(
         base,
         partitioned_by="dataproc STRING",
     )
-    for day in days:
-        add_partition(spark, table, {"dataproc": day})
+    add_partitions(spark, table, [{"dataproc": day} for day in days])
 
     return spark.table(table).where(F.col("dataproc").isin(days))

@@ -6,7 +6,8 @@ replaced existing partitions (:375-384) — a rerun duplicates data. We fix
 that with dynamic partition overwrite: ``mode("overwrite")`` +
 ``partitionOverwriteMode=dynamic`` replaces exactly the partitions present
 in the incoming frame, leaving the rest of the table intact. Idempotent
-reruns for free.
+reruns for free. The writer sets dynamic mode itself, so the guarantee
+does not depend on how the session was configured.
 
 At 100 TB the other sink killer is small files: a daily job writing one
 tiny file per (date, sector) partition produces millions of files a year.
@@ -78,13 +79,16 @@ def write_parquet_overwrite_partitions(
 ) -> None:
     """Idempotent partition-level replace (dynamic partition overwrite).
 
-    Requires ``spark.sql.sources.partitionOverwriteMode=dynamic`` (set by
-    :func:`stockpy_spark.session.get_spark`). Only the partitions present
-    in ``df`` are replaced; reruns of the same process date do not
-    duplicate rows (fixes reference bug at extract_stocks_job.py:375-393).
+    Sets ``partitionOverwriteMode=dynamic`` on the writer itself: in a
+    session left in static mode (a Glue job's own session, say) a plain
+    ``mode("overwrite")`` would delete every partition ``df`` does not
+    hold. Only the partitions present in ``df`` are replaced; reruns of
+    the same process date do not duplicate rows (fixes reference bug at
+    extract_stocks_job.py:375-393).
     """
     (
         df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .option("compression", compression)
         .partitionBy(*partition_by)
         .parquet(path)

@@ -109,6 +109,86 @@ def test_add_drop_partition_manual_registration(spark, tmp_path):
     spark.sql("DROP DATABASE cat_padd")
 
 
+def _jobs_run_by(spark, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` runs, read from the status store
+    after draining the listener bus that feeds it."""
+    sc = spark.sparkContext
+    sc.setJobGroup("partition-registration", "partition registration")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup("partition-registration"))
+
+
+def test_partition_registration_runs_no_job(spark, tmp_path):
+    """add_partition, add_partitions and drop_partition are metadata
+    only: the name check reads the catalog, the DDL runs no job. Both
+    a qualified ``db.t`` and a bare ``t`` (current database) resolve."""
+    from stockpy_spark.sources import add_partition, add_partitions, drop_partition
+
+    path = str(tmp_path / "tbl")
+    days = ["20240101", "20240102", "20240103", "20240104"]
+    df = spark.createDataFrame(
+        [(i, d) for i, d in enumerate(days)], "id int, dataproc string"
+    )
+    write_parquet_partitioned(df, path, ["dataproc"], mode="overwrite")
+    create_database(spark, "cat_pjob")
+    create_external_table(
+        spark, "cat_pjob.t", "id INT", path, partitioned_by="dataproc STRING"
+    )
+    try:
+        assert _jobs_run_by(
+            spark,
+            lambda: add_partitions(
+                spark, "cat_pjob.t", [{"dataproc": d} for d in days[:3]]
+            ),
+        ) == []
+        assert _jobs_run_by(
+            spark, lambda: add_partition(spark, "cat_pjob.t", {"dataproc": days[3]})
+        ) == []
+        assert spark.table("cat_pjob.t").count() == 4
+        add_partitions(spark, "cat_pjob.t", [{"dataproc": d} for d in days])  # idempotent
+        add_partitions(spark, "cat_pjob.t", [])  # no specs, no DDL
+        assert spark.table("cat_pjob.t").count() == 4
+        # an explicit location registers a directory outside key=value layout
+        add_partitions(
+            spark, "cat_pjob.t", [{"dataproc": "copy"}], [f"{path}/dataproc={days[1]}"]
+        )
+        assert spark.table("cat_pjob.t").where("dataproc = 'copy'").count() == 1
+        drop_partition(spark, "cat_pjob.t", {"dataproc": "copy"})
+
+        current = spark.catalog.currentDatabase()
+        spark.catalog.setCurrentDatabase("cat_pjob")
+        try:
+            assert _jobs_run_by(
+                spark, lambda: drop_partition(spark, "t", {"dataproc": days[0]})
+            ) == []
+        finally:
+            spark.catalog.setCurrentDatabase(current)
+        assert sorted(r.id for r in spark.table("cat_pjob.t").collect()) == [1, 2, 3]
+    finally:
+        spark.sql("DROP TABLE cat_pjob.t")
+        spark.sql("DROP DATABASE cat_pjob")
+
+
+def test_partition_registration_missing_table_raises(spark):
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from stockpy_spark.sources import add_partition, add_partitions, drop_partition
+
+    spec = {"dataproc": "20240101"}
+    with pytest.raises(AnalysisException):
+        add_partition(spark, "cat_nope.t", spec)
+    with pytest.raises(AnalysisException):
+        add_partitions(spark, "cat_nope.t", [spec])
+    with pytest.raises(AnalysisException):
+        drop_partition(spark, "cat_nope.t", spec)
+
+
 def test_partition_spec_escaped_and_validated(spark, tmp_path):
     """Partition values are interpolated into DDL: a single quote must
     be escaped (not break the statement / inject), and a column that is

@@ -84,6 +84,29 @@ def test_dynamic_partition_overwrite_idempotent(spark, tmp_path):
     assert out.filter("dataproc = '20240101'").count() == 2
 
 
+def test_overwrite_partitions_keeps_other_days_in_static_session(spark, tmp_path):
+    """The writer sets dynamic mode itself: in a session left in static
+    partition-overwrite mode, writing day 2 must not delete day 1."""
+    path = os.path.join(str(tmp_path), "tbl")
+    key = "spark.sql.sources.partitionOverwriteMode"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        for day, v in (("20240101", 1), ("20240102", 2)):
+            write_parquet_overwrite_partitions(
+                spark.createDataFrame([(day, v)], "dataproc string, v int"),
+                path,
+                ["dataproc"],
+            )
+    finally:
+        spark.conf.set(key, saved)
+    out = spark.read.parquet(path)
+    assert sorted((str(r.dataproc), r.v) for r in out.collect()) == [
+        ("20240101", 1),
+        ("20240102", 2),
+    ]
+
+
 def test_parquet_physical_toggles_dictionary_and_bloom(spark, tmp_path):
     """Footer-level verification of the physical-layout toggles the
     reference sets (extract_stocks_job.py:233-236,388-390): with
