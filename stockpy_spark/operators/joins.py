@@ -6,6 +6,12 @@ Scale notes baked into each operator:
   dimension must never shuffle a 100 TB fact table; Catalyst would usually
   pick broadcast on its own under autoBroadcastJoinThreshold, the hint
   makes it deterministic).
+- The dimension-PRESERVING enrichment (``dim LEFT JOIN fact``) picks
+  its plan from Catalyst's size estimate of the fact: a fact under
+  autoBroadcastJoinThreshold is the broadcast build side of one hash
+  join (2 jobs for a write: the broadcast and the write); a larger or
+  unsized fact takes a two-pass plan that never shuffles it (up to 5
+  jobs).
 - The "attach group totals to every row" pattern ships in two shapes: the
   reference's agg+back-join (J2, transform_stocks_job.py:181) and the
   idiomatic window aggregate, which does ONE shuffle on the group key
@@ -41,22 +47,38 @@ def dim_preserving_enrich(
     fact has no match (reference: df_map.join(df_data, "Ticker",
     "left"), extract_stocks_job.py:144) — WITHOUT shuffling the fact.
 
-    A left-outer join that preserves the tiny side cannot broadcast in
-    Spark (the preserved side must stream, so the build side would be
-    the 100 TB fact): written directly, Catalyst plans a sort-merge
-    join that shuffles the whole fact on the join key. This
-    formulation keeps the fact unshuffled:
+    A left-outer join that preserves the dim can only broadcast the
+    fact (the preserved side must stream). Written directly on an
+    unsized or large fact, Catalyst plans a sort-merge join that
+    shuffles the whole fact on the join key. The plan is therefore
+    chosen from Catalyst's size estimate of the fact (no job):
 
-    1. ``fact INNER JOIN broadcast(dim)`` — map-side hash join;
-    2. matched keys = map-side-combined distinct over the join key
-       (result is at most |dim| rows);
-    3. dim rows whose key is absent -> appended with NULL fact columns
-       (broadcast anti-join against the tiny matched-key set).
+    - ``0 <= size <= spark.sql.autoBroadcastJoinThreshold``: the fact
+      is small enough to be the build side, so this is
+      ``dim.join(broadcast(fact), on, "left")`` — one broadcast hash
+      join, no shuffle; a write over it runs 2 jobs (the fact's
+      broadcast, the write).
+    - otherwise (a large fact, threshold -1, or a frame with no size
+      statistics such as rows built on the driver): two narrow passes
+      over the fact, up to 5 jobs for a write:
 
-    Two narrow passes over the fact instead of one full shuffle of it.
-    Result rows are identical to ``dim.join(fact, on, "left")``.
+      1. ``fact INNER JOIN broadcast(dim)`` — map-side hash join;
+      2. matched keys = map-side-combined distinct over the join key
+         (result is at most |dim| rows);
+      3. dim rows whose key is absent -> appended with NULL fact
+         columns (broadcast anti-join against the tiny matched-key set).
+
+    Either way the result rows and column order (keys, dim columns,
+    fact columns) are identical to ``dim.join(fact, on, "left")`` when
+    the key columns have one type on both sides (the two-pass plan
+    returns a widened key type where they differ).
     """
     keys = [on] if isinstance(on, str) else list(on)
+    # Catalyst's estimate from the optimized plan's statistics: no job
+    size = fact._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    conf = dim.sparkSession._jsparkSession.sessionState().conf()
+    if 0 <= size <= conf.autoBroadcastJoinThreshold():
+        return dim.join(F.broadcast(fact), on=keys, how="left")
     matched = fact.join(F.broadcast(dim), on=keys, how="inner").select(
         *keys,
         *[F.col(c) for c in dim.columns if c not in keys],

@@ -15,6 +15,13 @@ and wrong at 100 TB. At scale, sources land as files first and Spark
 scans them (S1), or a frame of URLs fans out through
 :func:`distributed_fetch` (mapInPandas — Arrow-batched, executor-side,
 rate-limited per partition).
+
+Rows built on the driver (``createDataFrame`` over a list) carry no
+size estimate for Catalyst, so a join that sizes its input — like
+:func:`~stockpy_spark.operators.dim_preserving_enrich`, which
+broadcasts a fact under the broadcast threshold — treats them as large
+and takes its two-pass plan. A :class:`FrameConnector` over a scanned
+file keeps the scan's size estimate.
 """
 
 from __future__ import annotations

@@ -86,9 +86,9 @@ def extract_stocks(
     )
     # dimension-preserving left join: tickers with no quotes survive
     # with NULL quote columns (the reference's left-join-miss edge
-    # case). The broadcast-friendly formulation keeps the quote side
-    # unshuffled — written as dim.join(quotes, "left"), the preserved
-    # tiny side forces a sort-merge shuffle of the fact.
+    # case). Quotes under the broadcast threshold are the build side
+    # of one hash join (the write runs 2 jobs); larger or unsized
+    # quotes take the two-pass plan that never shuffles them.
     joined = dim_preserving_enrich(dim, scrubbed, "Ticker")
     renamed = rename_columns(joined, RAW_RENAMES)
     out = add_literal_column(renamed, "dataproc", process_date, T.StringType())

@@ -109,21 +109,7 @@ def test_add_drop_partition_manual_registration(spark, tmp_path):
     spark.sql("DROP DATABASE cat_padd")
 
 
-def _jobs_run_by(spark, fn) -> list[int]:
-    """Ids of the Spark jobs ``fn()`` runs, read from the status store
-    after draining the listener bus that feeds it."""
-    sc = spark.sparkContext
-    sc.setJobGroup("partition-registration", "partition registration")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return list(sc.statusTracker().getJobIdsForGroup("partition-registration"))
-
-
-def test_partition_registration_runs_no_job(spark, tmp_path):
+def test_partition_registration_runs_no_job(spark, tmp_path, jobs_run_by):
     """add_partition, add_partitions and drop_partition are metadata
     only: the name check reads the catalog, the DDL runs no job. Both
     a qualified ``db.t`` and a bare ``t`` (current database) resolve."""
@@ -140,14 +126,14 @@ def test_partition_registration_runs_no_job(spark, tmp_path):
         spark, "cat_pjob.t", "id INT", path, partitioned_by="dataproc STRING"
     )
     try:
-        assert _jobs_run_by(
-            spark,
+        assert jobs_run_by(
+            "add-partitions",
             lambda: add_partitions(
                 spark, "cat_pjob.t", [{"dataproc": d} for d in days[:3]]
             ),
         ) == []
-        assert _jobs_run_by(
-            spark, lambda: add_partition(spark, "cat_pjob.t", {"dataproc": days[3]})
+        assert jobs_run_by(
+            "add-partition", lambda: add_partition(spark, "cat_pjob.t", {"dataproc": days[3]})
         ) == []
         assert spark.table("cat_pjob.t").count() == 4
         add_partitions(spark, "cat_pjob.t", [{"dataproc": d} for d in days])  # idempotent
@@ -163,8 +149,8 @@ def test_partition_registration_runs_no_job(spark, tmp_path):
         current = spark.catalog.currentDatabase()
         spark.catalog.setCurrentDatabase("cat_pjob")
         try:
-            assert _jobs_run_by(
-                spark, lambda: drop_partition(spark, "t", {"dataproc": days[0]})
+            assert jobs_run_by(
+                "drop-partition", lambda: drop_partition(spark, "t", {"dataproc": days[0]})
             ) == []
         finally:
             spark.catalog.setCurrentDatabase(current)

@@ -108,6 +108,34 @@ def test_extract_stocks_golden(spark, tmp_path):
     assert (tmp_path / "raw_stocks" / "dataproc=20240105").exists()
 
 
+def test_extract_stocks_write_over_scanned_quotes_runs_two_jobs(spark, tmp_path, jobs_run_by):
+    """Quotes scanned from parquet carry a size estimate under the
+    broadcast threshold, so the dimension-preserving join broadcasts
+    them and the write runs at its floor: the broadcast and the write
+    (the two-pass plan runs 5)."""
+    from stockpy_spark.pipelines import FrameConnector
+
+    src = str(tmp_path / "quotes")
+    spark.createDataFrame(_quote_rows(), QUOTE_SCHEMA).write.parquet(src)
+    quotes = spark.read.parquet(src)  # schema inference runs its own job
+    out_dir = str(tmp_path / "raw_stocks")
+    jobs = jobs_run_by(
+        "extract-stocks-write",
+        lambda: extract_stocks(
+            spark,
+            FrameConnector(quotes),
+            STOCKS,
+            "20240105",
+            output_path=out_dir,
+        ),
+    )
+    assert len(jobs) <= 2, jobs
+    landed = spark.read.parquet(out_dir)
+    assert landed.count() == 5  # 4 quote rows + ELET3 with no quotes
+    elet = landed.where(F.col("ticker") == "ELET3").collect()
+    assert len(elet) == 1 and elet[0].close is None and elet[0].sector == "Energy"
+
+
 def test_extract_then_transform_stocks_end_to_end(spark):
     raw = extract_stocks(
         spark, LiteralConnector(_quote_rows(), QUOTE_SCHEMA), STOCKS, "20240105"

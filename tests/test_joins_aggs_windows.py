@@ -146,20 +146,40 @@ def test_salted_join_rejects_right_and_full_outer(spark):
         assert got == want, how
 
 
-def test_dim_preserving_enrich_equals_left_join(spark):
+def test_dim_preserving_enrich_equals_left_join(spark, sql_conf, tmp_path):
+    """Both plans of dim_preserving_enrich — the fact broadcast under
+    autoBroadcastJoinThreshold, the two-pass plan with broadcasting
+    off — give the rows and column order of ``dim.join(fact, on,
+    "left")``, with a NULL dim key and a duplicated dim key."""
     from stockpy_spark.operators import dim_preserving_enrich
 
     dim = spark.createDataFrame(
-        [("A", "dim-a"), ("B", "dim-b"), ("MISS", "dim-miss")], "k string, d string"
+        [("A", "dim-a"), ("B", "dim-b"), ("B", "dim-b2"), ("MISS", "dim-miss"),
+         (None, "dim-null")],
+        "k string, d string",
     )
-    fact = spark.createDataFrame(
-        [("A", 1), ("A", 2), ("B", 3), ("X", 9)], "k string, v int"
-    )
-    got = sorted(map(tuple, dim_preserving_enrich(dim, fact, "k").collect()))
-    want = sorted(map(tuple, dim.join(fact, "k", "left").collect()))
-    assert got == want
-    assert ("MISS", "dim-miss", None) in got  # unmatched dim preserved
-    assert not any(r[0] == "X" for r in got)  # fact-only keys excluded
+    # a scanned fact carries Catalyst's size estimate; driver rows do not
+    spark.createDataFrame(
+        [("A", 1), ("A", 2), ("B", 3), ("X", 9), (None, 7)], "k string, v int"
+    ).write.parquet(str(tmp_path / "fact"))
+    fact = spark.read.parquet(str(tmp_path / "fact"))
+    for confs, two_pass in [
+        ({}, False),
+        ({"spark.sql.autoBroadcastJoinThreshold": "-1"}, True),
+    ]:
+        with sql_conf(confs):
+            out = dim_preserving_enrich(dim, fact, "k")
+            want_df = dim.join(fact, "k", "left")
+            assert out.columns == want_df.columns == ["k", "d", "v"]
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert ("Union" in plan) == two_pass, plan
+            got = sorted(map(tuple, out.collect()), key=repr)
+            want = sorted(map(tuple, want_df.collect()), key=repr)
+        assert got == want, confs
+        assert ("MISS", "dim-miss", None) in got  # unmatched dim preserved
+        assert (None, "dim-null", None) in got  # a NULL dim key never matches
+        assert [r for r in got if r[0] == "B"] == [("B", "dim-b", 3), ("B", "dim-b2", 3)]
+        assert not any(r[0] == "X" for r in got)  # fact-only keys excluded
 
 
 def test_fellegi_sunter_weights_and_threshold(spark):

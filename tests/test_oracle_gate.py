@@ -5,9 +5,11 @@ Covers the exact set-Jaccard family, which all runs through
 ``setsim.set_jaccard_pairs``; every query served by the blocked
 candidate-then-verify kernel ``dedup.block_pairs`` (MinHash-LSH,
 SimHash-32/64, aHash, hyperplane-LSH recall) plus the fuzzy
-decontamination that shares its lane agreement; and Spearman's
-bucketed rank tier (``stats.RANK_LITERAL_MAX = 0``), which the default
-literal tier hides at this scale factor.
+decontamination that shares its lane agreement; Spearman's bucketed
+rank tier (``stats.RANK_LITERAL_MAX = 0``), which the default literal
+tier hides at this scale factor; and the extract_stocks pipeline under
+both plans of ``joins.dim_preserving_enrich`` (the fact broadcast at
+the default threshold, the two-pass plan with broadcasting off).
 """
 
 from __future__ import annotations
@@ -35,7 +37,10 @@ _GATED = [
     "pipeline_image_dedup",
     "gate_embedding_lsh_recall",
     "decontaminate_fuzzy",
+    # joins.dim_preserving_enrich, broadcast-fact plan
+    "pipeline_extract_stocks",
 ]
+_NO_BROADCAST = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
 
 
 @pytest.fixture(scope="module")
@@ -48,16 +53,23 @@ def duck(sf_dir):
 
 
 @pytest.mark.parametrize(
-    "name,rank_literal_max",
-    [pytest.param(q, stats_mod.RANK_LITERAL_MAX, id=q) for q in _GATED]
-    + [pytest.param("stats_spearman", 0, id="stats_spearman_bucketed")],
+    "name,rank_literal_max,confs",
+    [pytest.param(q, stats_mod.RANK_LITERAL_MAX, {}, id=q) for q in _GATED]
+    + [
+        pytest.param("stats_spearman", 0, {}, id="stats_spearman_bucketed"),
+        pytest.param(
+            "pipeline_extract_stocks", stats_mod.RANK_LITERAL_MAX, _NO_BROADCAST,
+            id="pipeline_extract_stocks_two_pass",
+        ),
+    ],
 )
-def test_query_matches_oracle(spark, sf_dir, duck, name, rank_literal_max):
+def test_query_matches_oracle(spark, sf_dir, duck, sql_conf, name, rank_literal_max, confs):
     prev = stats_mod.RANK_LITERAL_MAX
     stats_mod.RANK_LITERAL_MAX = rank_literal_max
     try:
-        sdf = QUERIES[name](spark, sf_dir)
-        got = canon_rows(sdf.columns, [tuple(r) for r in sdf.collect()])
+        with sql_conf(confs):
+            sdf = QUERIES[name](spark, sf_dir)
+            got = canon_rows(sdf.columns, [tuple(r) for r in sdf.collect()])
     finally:
         stats_mod.RANK_LITERAL_MAX = prev
     rel = duck.sql(ORACLES[name])

@@ -15,6 +15,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -227,16 +228,30 @@ def test_q6_filters_push_to_scan(spark):
     assert "l_extendedprice" in read_schema and "l_returnflag" not in read_schema
 
 
-def test_dim_preserving_enrich_never_shuffles_fact(spark):
-    # the dim-preserving outer join must not sort-merge-shuffle the fact:
-    # broadcast inner join + bounded-key anti fill only
+def _enrich_nation_lineitem(spark):
     from stockpy_spark.operators import dim_preserving_enrich
 
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     nation = spark.read.parquet(f"{SF_DIR}/nation.parquet").select(
         F.col("n_nationkey").alias("l_suppkey"), "n_name"
     )
-    p = plan(dim_preserving_enrich(nation, li, "l_suppkey"), mode="simple")
+    return plan(dim_preserving_enrich(nation, li, "l_suppkey"), mode="simple")
+
+
+def test_dim_preserving_enrich_broadcasts_small_fact(spark):
+    # a fact Catalyst sizes under autoBroadcastJoinThreshold is the build
+    # side of ONE hash join: the dim streams, nothing shuffles
+    p = _enrich_nation_lineitem(spark)
+    assert re.search(r"\bExchange\b", p) is None
+    assert p.count("BroadcastHashJoin") == 1
+
+
+def test_dim_preserving_enrich_never_shuffles_fact(spark, sql_conf):
+    # the dim-preserving outer join must not sort-merge-shuffle a fact
+    # too large to broadcast: broadcast inner join + bounded-key anti
+    # fill only
+    with sql_conf({"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        p = _enrich_nation_lineitem(spark)
     assert "SortMergeJoin" not in p
     # the fact rows themselves never shuffle: the single permitted
     # exchange is the distinct over the semi-filtered KEY column

@@ -191,6 +191,33 @@ def test_transform_news_golden(spark):
     assert rows["l1"].dataproc == "20240105"
 
 
+def test_transform_news_keeps_link_with_a_complete_copy(spark):
+    """A link whose first copy by title lacks a required field keeps
+    its complete copy: rows missing title/source are dropped BEFORE the
+    per-link dedup (ascending title sorts NULL first, so deduping first
+    kept the incomplete copy and then dropped the link)."""
+    raw = spark.createDataFrame(
+        [
+            ("ITUB4", None, "l9", "G1", "2024-01-05T10:00:00", "2024-01-05"),
+            ("ITUB4", "t5", "l9", "G1", "2024-01-05T11:00:00", "2024-01-05"),
+            ("BBDC4", "a0", "l8", None, "2024-01-05T10:00:00", "2024-01-05"),
+            ("BBDC4", "b1", "l8", "G2", "2024-01-05T12:00:00", "2024-01-05"),
+            # same link and title: the remaining columns pick the survivor
+            ("PETR4", "t7", "l7", "G3", "2024-01-05T10:00:00", "2024-01-05"),
+            ("ABEV3", "t7", "l7", "G3", "2024-01-05T10:00:00", "2024-01-05"),
+        ],
+        "ticker string, title string, link string, source string,"
+        "published_date string, extracted_date string",
+    )
+    rows = {r.link: r for r in transform_news(raw, "20240105").collect()}
+    assert {k: (r.title, r.source) for k, r in rows.items()} == {
+        "l9": ("t5", "G1"),
+        "l8": ("b1", "G2"),
+        "l7": ("t7", "G3"),
+    }
+    assert rows["l7"].ticker == "ABEV3"
+
+
 def test_pipeline_runner_fail_fast():
     p = Pipeline().add("a", lambda ctx: ctx.setdefault("x", 1))
     p.add("boom", lambda ctx: 1 / 0).add("never", lambda ctx: ctx.update(y=2))
