@@ -68,10 +68,8 @@ def dim_preserving_enrich(
       3. dim rows whose key is absent -> appended with NULL fact
          columns (broadcast anti-join against the tiny matched-key set).
 
-    Either way the result rows and column order (keys, dim columns,
-    fact columns) are identical to ``dim.join(fact, on, "left")`` when
-    the key columns have one type on both sides (the two-pass plan
-    returns a widened key type where they differ).
+    Either way the result rows, column order (keys, dim columns, fact
+    columns) and key types are those of ``dim.join(fact, on, "left")``.
     """
     keys = [on] if isinstance(on, str) else list(on)
     # Catalyst's estimate from the optimized plan's statistics: no job
@@ -79,8 +77,10 @@ def dim_preserving_enrich(
     conf = dim.sparkSession._jsparkSession.sessionState().conf()
     if 0 <= size <= conf.autoBroadcastJoinThreshold():
         return dim.join(F.broadcast(fact), on=keys, how="left")
+    # the inner join returns keys of the wider of the two types; a
+    # matched key equals a dim key, so it casts back to the dim's type
     matched = fact.join(F.broadcast(dim), on=keys, how="inner").select(
-        *keys,
+        *[F.col(k).cast(dim.schema[k].dataType).alias(k) for k in keys],
         *[F.col(c) for c in dim.columns if c not in keys],
         *[F.col(c) for c in fact.columns if c not in keys],
     )

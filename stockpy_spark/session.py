@@ -14,6 +14,14 @@ multi-executor cluster:
   byte-comparable against the DuckDB oracle and reproducible across hosts.
 - Arrow enabled for every pandas boundary (createDataFrame, toPandas,
   pandas UDFs).
+- Fixed JVM costs sized to the work. Every pass of a recurring plan
+  reuses its generated classes (a codegen cache that holds a whole
+  release pass), and a local session sizes its Tungsten memory pages
+  and broadcast pieces to local tasks rather than to an 8g heap. Each
+  is an existing Spark conf; the reasons and their measured cost
+  (driver JVM allocation per warm pass, ``tools/alloc_profile.py``)
+  sit next to each setting and in BASELINE.md, "Fixed JVM costs per
+  pass".
 """
 
 from __future__ import annotations
@@ -51,6 +59,13 @@ def spark_conf_defaults(cpus: int | None = None) -> dict[str, str]:
         # append-duplication bug, extract_stocks_job.py:375-393).
         "spark.sql.sources.partitionOverwriteMode": "dynamic",
         "spark.ui.enabled": "false",
+        # Spark's default LRU of 100 generated classes is smaller than
+        # one pass of the release pipeline (~300 distinct classes), so
+        # each class was evicted before its reuse and every warm pass
+        # recompiled ~307 of them through Janino: 564 of the pass's
+        # 3618 MB allocated. With 1000 entries a warm pass compiles
+        # 0-10 (10 MB). A cached class holds tens of KB.
+        "spark.sql.codegen.cache.maxEntries": "1000",
         # Auto-broadcast stays at Spark's 10MB default. Round 6 traced
         # q3/q18's chronic 3.2-3.6x 10x-scale ratios to an earlier 64MB
         # override: at sf1 it broadcast the FILTERED LINEITEM (97% of
@@ -92,6 +107,22 @@ def get_spark(
         conf["spark.driver.memory"] = os.environ.get(
             "SPARK_GRAFT_DRIVER_MEM", "8g"
         )
+        # Spark sizes Tungsten pages as execution memory / cores / 16,
+        # capped at 64 MB, which the 8g heap above reaches, and every
+        # hash-aggregate fast map, BytesToBytesMap and sorter
+        # zero-fills a whole page however few rows its task holds: 428
+        # MB of a release pass, 188 MB of a lake_etl pass; 41 and 15
+        # MB with 4 MB pages. A record larger than a page still gets a
+        # page of its own size.
+        conf["spark.buffer.pageSize"] = "4m"
+        # TorrentBroadcast allocates one whole piece (4 MB by default)
+        # per broadcast, however few KB it holds, and every stage's
+        # task binary and every scan's Hadoop conf is a broadcast: the
+        # broadcast path took 541 MB of a release pass and 289 MB of a
+        # lake_etl pass; 248 and 140 MB with 1 MB pieces. Pieces never
+        # cross a network in local mode, so large ones buy no fetch
+        # parallelism.
+        conf["spark.broadcast.blockSize"] = "1m"
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -254,10 +254,13 @@ def test_analyze_table_feeds_cbo_stats(spark, tmp_path):
 def test_session_defaults_scale_conscious(spark):
     """The conf contract the 100 TB design relies on: AQE with skew-join
     splitting and partition coalescing, dynamic partition overwrite,
-    parquet pushdown, UTC, Arrow."""
+    parquet pushdown, UTC, Arrow; a codegen cache that holds a pass's
+    classes, and local memory pages and broadcast pieces sized to
+    local tasks."""
     from stockpy_spark.session import spark_conf_defaults
 
     conf = spark_conf_defaults()
+    assert conf["spark.sql.codegen.cache.maxEntries"] == "1000"
     assert conf["spark.sql.adaptive.enabled"] == "true"
     assert conf["spark.sql.adaptive.skewJoin.enabled"] == "true"
     assert conf["spark.sql.adaptive.coalescePartitions.enabled"] == "true"
@@ -267,3 +270,25 @@ def test_session_defaults_scale_conscious(spark):
     # and the live test session actually carries them
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "dynamic"
+    sc = spark.sparkContext
+    assert sc._jsc.sc().env().memoryManager().pageSizeBytes() == 4 << 20
+    assert sc.getConf().get("spark.broadcast.blockSize") == "1m"
+
+
+def test_codegen_cache_holds_its_working_set(spark):
+    """A recurring plan reuses its generated code: after one round of
+    150 distinct whole-stage-codegen plans (each literal is inlined, so
+    each is its own class), a second round compiles nothing. Spark's
+    default cache of 100 recompiles all 150. Building a physical plan's
+    RDD compiles its code on the driver without running a job."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compile_all():
+        for i in range(150):
+            df = spark.range(10).selectExpr(f"id * {i} AS x")
+            df._jdf.queryExecution().executedPlan().execute()
+
+    compile_all()
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    compile_all()
+    assert metrics.METRIC_COMPILATION_TIME().getCount() - before == 0

@@ -181,6 +181,18 @@ def test_dim_preserving_enrich_equals_left_join(spark, sql_conf, tmp_path):
         assert [r for r in got if r[0] == "B"] == [("B", "dim-b", 3), ("B", "dim-b2", 3)]
         assert not any(r[0] == "X" for r in got)  # fact-only keys excluded
 
+    # an int dim key against a bigint fact key (nation's n_nationkey
+    # against lineitem's l_suppkey): the output keeps the dim's key type
+    dim = spark.createDataFrame([(1, "one"), (2, "two")], "k int, d string")
+    spark.createDataFrame([(1, 10), (3, 30)], "k bigint, v int").write.parquet(
+        str(tmp_path / "wide_fact"))
+    fact = spark.read.parquet(str(tmp_path / "wide_fact"))
+    with sql_conf({"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        out = dim_preserving_enrich(dim, fact, "k")
+        want_df = dim.join(fact, "k", "left")
+        assert out.schema == want_df.schema, (out.schema, want_df.schema)
+        assert sorted(map(tuple, out.collect())) == [(1, "one", 10), (2, "two", None)]
+
 
 def test_fellegi_sunter_weights_and_threshold(spark):
     """Pins FS scoring (operators/joins.py fellegi_sunter_scores):

@@ -57,3 +57,51 @@ def test_evicted_ran_stages_nets_out_skipped_stages():
     # a job gone too: its stages cannot be told apart, so all count
     lost = Window(jobs=jobs[1:], stages=ran, evicted_stages=2, evicted_jobs=1)
     assert evicted_ran_stages(lost) == 2
+
+
+def test_alloc_profile_charges_innermost_mechanism():
+    """``tools/alloc_profile.py`` weighs a new-TLAB event by its TLAB and
+    an outside-TLAB event by its size, and charges each to the innermost
+    frame that names a mechanism: a broadcast piece written while a
+    Hadoop conf serializes is a broadcast cost, the conf's own strings
+    are a Hadoop-conf cost."""
+    from tools.alloc_profile import parse_events
+
+    text = """
+jdk.ObjectAllocationInNewTLAB {
+  allocationSize = 48 bytes
+  tlabSize = 1.5 MB
+  stackTrace = [
+    java.util.Arrays.copyOf(byte[], int) line: 3537
+    org.apache.hadoop.conf.Configuration.write(DataOutput) line: 1
+    org.apache.spark.broadcast.TorrentBroadcast$.blockifyObject(Object) line: 1
+    ...
+  ]
+}
+
+jdk.ObjectAllocationOutsideTLAB {
+  allocationSize = 1.0 MB
+  stackTrace = [
+    java.nio.ByteBuffer.allocate(int) line: 1
+    org.apache.spark.util.io.ChunkedByteBufferOutputStream.allocateNewChunkIfNeeded() line: 1
+    org.apache.hadoop.conf.Configuration.write(DataOutput) line: 1
+  ]
+}
+
+jdk.ObjectAllocationOutsideTLAB {
+  allocationSize = 4.0 MB
+  stackTrace = [
+    org.apache.spark.unsafe.memory.HeapMemoryAllocator.allocate(long) line: 1
+    org.apache.spark.memory.TaskMemoryManager.allocatePage(long, MemoryConsumer) line: 1
+  ]
+}
+
+jdk.ObjectAllocationOutsideTLAB {
+  allocationSize = 512 bytes
+  stackTrace = [
+    org.apache.spark.rdd.RDD.iterator(Partition, TaskContext) line: 1
+  ]
+}
+"""
+    assert parse_events(text.splitlines()) == {
+        "hadoop_conf": 1.5 * 2**20, "broadcast": 2**20, "pages": 4 * 2**20, "other": 512}
