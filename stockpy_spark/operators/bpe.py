@@ -223,9 +223,10 @@ def apply_bpe_merges_arrow(
     character (Unicode private-use area, guaranteed absent from
     whitespace tokens that survive tokenize). This is the same
     fold==replace identity the text_bpe_vocab DuckDB oracle exploits,
-    promoted to the execution path (the pq_quantize_arrow precedent:
-    keep the declarative version as the spec, ship the kernel where
-    the per-row expression cost dominates).
+    promoted to the execution path where the per-row expression cost
+    dominates. Unlike PQ, whose Arrow kernel is its only Spark path,
+    the fold version stays: it is the only path for non-integral ids
+    and bit-identical beyond ASCII (restrictions below).
 
     Restrictions (each either checked or a documented seam):
 

@@ -22,203 +22,21 @@ length. "Characters" are token characters (inter-token whitespace
 excluded) of the lowercased whitespace tokenization — an exact,
 engine-portable definition.
 
-Scale shape: every statistic is a pure array-expression computation on
-the document's own token array — transform / filter / aggregate
-higher-order functions. ZERO shuffle, zero explode, zero Python: the
-operator is a narrow map over the corpus, so at 100 TB it scales with
-scan bandwidth and never re-keys the data (the per-doc groupBy
-alternative would shuffle the entire corpus by doc_id for state the
-size of one document).
-
-Evaluation-cost design note (the first draft's lesson): Catalyst does
-NOT common-subexpression-eliminate inside higher-order-function
-lambdas, so an expression like ``array_min(filter(distinct, g ->
-count_of(g) == max_cnt))`` re-evaluates the O(nt^2) ``max_cnt`` tree
-for EVERY lambda element — O(nt^3) per document, which turned a
-500-doc sf0.01 run into minutes. The fix is structural: each
-intermediate (gram array, per-position count array, max count, best
-gram, occurrence starts) is materialized as a named column in its own
-chained ``select``, so Spark evaluates it once per row and later
-lambdas reference the row value. CollapseProject will not inline a
-non-cheap producer referenced more than once, so the stages stay
-one-pass; per-doc cost is bounded O(nt^2) (the count pass) —
-document-sized, independent of corpus size.
+Scale shape: one ``mapInPandas`` pass computes every statistic per
+document in Python, counting grams with a Counter in O(nt) — a
+ZERO-shuffle narrow map with document-sized state, so at 100 TB it
+scales with scan bandwidth and never re-keys the data (the per-doc
+groupBy alternative would shuffle the entire corpus by doc_id for
+state the size of one document). A Spark higher-order-function form
+of the same statistics was the corpus-worst CPU query (an O(nt^2)
+per-position count pass, every HOF interpreted per element):
+25.4 s against this pass's 1.5 s at sf1 (BASELINE.md §4, Round-13).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _grams(toks: Column, nt: Column, n: int) -> Column:
-    """Array of the document's word n-grams (space-joined), empty when
-    the doc has fewer than n tokens."""
-    return F.when(nt < n, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), nt - F.lit(n - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + F.lit(j)) for j in range(n)]
-            ),
-        )
-    )
-
-
-def _union_char_coverage(starts: Column, lens: Column, n: int) -> Column:
-    """Characters covered by the union of fixed-length-``n`` token
-    intervals starting at ``starts`` (0-based, ASSUMED SORTED
-    ascending — sequence/filter preserve order). Each interval
-    [s, s+n) contributes the lengths of its tokens not already covered
-    by an earlier interval: the running-max accumulator walks the
-    sorted starts once, summing slice(lens) over the uncovered tail of
-    each interval — the same interval-union arithmetic as
-    ``dedup.duplicated_span_coverage``, char-weighted."""
-    return F.aggregate(
-        starts,
-        F.struct(F.lit(0).alias("prev"), F.lit(0).cast("long").alias("chars")),
-        lambda acc, s: F.struct(
-            F.greatest(acc["prev"], s + F.lit(n)).alias("prev"),
-            (
-                acc["chars"]
-                + F.coalesce(
-                    F.aggregate(
-                        F.slice(
-                            lens,
-                            F.greatest(s, acc["prev"]) + 1,
-                            F.greatest(
-                                F.lit(0),
-                                s + F.lit(n) - F.greatest(s, acc["prev"]),
-                            ),
-                        ),
-                        F.lit(0).cast("long"),
-                        lambda a, x: a + x,
-                    ),
-                    F.lit(0).cast("long"),
-                )
-            ).alias("chars"),
-        ),
-        lambda acc: acc["chars"],
-    )
-
-
-def gopher_repetition_profile(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    top_ns: tuple[int, ...] = (2, 3, 4),
-    dup_ns: tuple[int, ...] = (5, 10),
-    dp: int = 6,
-) -> DataFrame:
-    """Per-document Gopher repetition statistics (module docstring):
-    (id, n_tokens, total_chars, top{n}_char_frac ..., dup{n}_char_frac
-    ...) for EVERY input row; docs too short for a given n (or empty)
-    score 0.0 on that statistic."""
-    toks = F.when(
-        F.col(text_col).isNull() | (F.trim(text_col) == ""),
-        F.array().cast("array<string>"),
-    ).otherwise(F.split(F.trim(F.lower(F.col(text_col))), r"\s+"))
-
-    base = df.select(
-        F.col(id_col).alias("__id"), toks.alias("__t")
-    ).select(
-        "__id",
-        "__t",
-        F.size("__t").alias("__nt"),
-        F.transform("__t", lambda x: F.length(x).cast("long")).alias("__lens"),
-    ).select(
-        "*",
-        F.aggregate(
-            "__lens", F.lit(0).cast("long"), lambda a, x: a + x
-        ).alias("__tot"),
-    )
-
-    nt = F.col("__nt")
-    all_ns = sorted(set(top_ns) | set(dup_ns))
-
-    # Stage 1: materialize each gram array once per row.
-    stage = base.select(
-        "*",
-        *[
-            _grams(F.col("__t"), nt, n).alias(f"__g{n}")
-            for n in all_ns
-        ],
-    )
-
-    # Stage 2: per-position occurrence counts — the one O(nt^2) pass.
-    def _counts(n: int) -> Column:
-        g = F.col(f"__g{n}")
-        return F.transform(g, lambda x: F.size(F.filter(g, lambda y: y == x)))
-
-    stage = stage.select(
-        "*", *[_counts(n).alias(f"__c{n}") for n in all_ns]
-    )
-
-    # Stage 3: for the top-gram family, materialize the winning gram
-    # (count DESC, gram ASC — when() without otherwise yields NULLs
-    # that array_min skips, so the min runs over max-count grams only;
-    # array_max re-evaluates per element but over the MATERIALIZED
-    # count array, so this stage is O(nt^2) worst-case, not O(nt^3)).
-    def _best(n: int) -> Column:
-        c = F.col(f"__c{n}")
-        return F.array_min(
-            F.zip_with(
-                f"__g{n}", f"__c{n}",
-                lambda g, cnt: F.when(cnt == F.array_max(c), g),
-            )
-        )
-
-    stage = stage.select(
-        "*", *[_best(n).alias(f"__best{n}") for n in top_ns]
-    )
-
-    # Stage 4: occurrence-start arrays (0-based starts into the token
-    # stream), guarded so short docs never index past the gram array.
-    def _top_starts(n: int) -> Column:
-        g = F.col(f"__g{n}")
-        return F.when(nt < n, F.array().cast("array<int>")).otherwise(
-            F.filter(
-                F.sequence(F.lit(0), nt - F.lit(n)),
-                lambda s: F.element_at(g, s + 1) == F.col(f"__best{n}"),
-            )
-        )
-
-    def _dup_starts(n: int) -> Column:
-        c = F.col(f"__c{n}")
-        return F.when(nt < n, F.array().cast("array<int>")).otherwise(
-            F.filter(
-                F.sequence(F.lit(0), nt - F.lit(n)),
-                lambda s: F.element_at(c, s + 1) > 1,
-            )
-        )
-
-    stage = stage.select(
-        "*",
-        *[_top_starts(n).alias(f"__ts{n}") for n in top_ns],
-        *[_dup_starts(n).alias(f"__ds{n}") for n in dup_ns],
-    )
-
-    # Stage 5: interval-union char coverage -> fractions.
-    tot = F.col("__tot")
-
-    def _frac(starts_col: str, n: int) -> Column:
-        return F.when((nt < n) | (tot == 0), F.lit(0.0)).otherwise(
-            _union_char_coverage(
-                F.col(starts_col), F.col("__lens"), n
-            ).cast("double")
-            / tot.cast("double")
-        )
-
-    cols = [
-        F.col("__id").alias(id_col),
-        nt.cast("long").alias("n_tokens"),
-        tot.alias("total_chars"),
-    ]
-    for n in top_ns:
-        cols.append(F.round(_frac(f"__ts{n}", n), dp).alias(f"top{n}_char_frac"))
-    for n in dup_ns:
-        cols.append(F.round(_frac(f"__ds{n}", n), dp).alias(f"dup{n}_char_frac"))
-
-    return stage.select(*cols)
 
 
 # The 8 words Gopher's "required stopwords" rule checks for (Rae et al.
@@ -402,7 +220,7 @@ def _gopher_gate(
     return feats, keep
 
 
-def gopher_repetition_profile_kernel(
+def gopher_repetition_profile(
     df: DataFrame,
     text_col: str,
     id_col: str,
@@ -410,22 +228,18 @@ def gopher_repetition_profile_kernel(
     dup_ns: tuple[int, ...] = (5, 10),
     dp: int = 6,
 ) -> DataFrame:
-    """Arrow-batched twin of :func:`gopher_repetition_profile` —
-    identical output, different execution. The expression path's
-    per-position count pass is O(nt^2) per document AND every HOF is
-    CodegenFallback (interpreted per element — this operator has been
-    the corpus-worst CPU query since r11); the kernel computes the
-    same statistics per document in plain Python with a Counter
-    (O(nt) counting) inside one ``mapInPandas`` pass — Arrow-batched,
-    still a ZERO-shuffle narrow map with document-sized state.
+    """Per-document Gopher repetition statistics (module docstring):
+    (id, n_tokens, total_chars, top{n}_char_frac ..., dup{n}_char_frac
+    ...) for EVERY input row, the id keeping its input type; docs too
+    short for a given n (or empty) score 0.0 on that statistic.
 
-    Parity is exact by construction, not approximate: every
-    intermediate is integer arithmetic (token lengths, interval
-    unions, counts) and the final division is the same two exact
-    longs, rounded HALF_UP at ``dp`` via Decimal — bit-for-bit the
-    `BigDecimal.setScale(dp, HALF_UP)` Spark's ``round`` applies
-    (pinned by tests/test_r6c_ops.py's kernel-parity case over the
-    real corpus and the hand fixtures)."""
+    Every intermediate is integer arithmetic (token lengths, interval
+    unions, counts) and the final division is of two exact longs,
+    rounded HALF_UP at ``dp`` via Decimal — bit-for-bit the
+    ``BigDecimal.setScale(dp, HALF_UP)`` Spark's ``round`` applies.
+    The ``text_gopher_repetition`` DuckDB oracle is the declarative
+    spec; tokenizer and rounding-tie rows are pinned in
+    tests/test_r6c_ops.py."""
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -459,15 +273,15 @@ def gopher_repetition_profile_kernel(
         # .split() are Unicode-whitespace (NBSP, thin space, \x1c-\x1f
         # as separators) and would tokenize web text differently.
         # After a space-only trim, leading/trailing \t etc. produce
-        # empty edge tokens under split's limit=-1 — exactly as the
-        # expression path counts them.
+        # empty edge tokens, as Spark's split(trim(lower(text)), '\s+')
+        # does under its limit=-1.
         ws = re.compile(r"[ \t\n\x0b\f\r]+")
 
         def tokens(text):
             if not isinstance(text, str):
                 return []
             if text.strip(" ") == "":
-                return []  # the expression path's trim(col)=='' branch
+                return []  # an all-space or empty doc has no tokens
             return ws.split(text.lower().strip(" "))
 
         def rnd(x: float) -> float:

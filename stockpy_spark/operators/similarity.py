@@ -412,8 +412,9 @@ def kmeans_assign_arrow(
     codegen'd). Plan: a KB codebook in the closure + one narrow scan
     per assignment pass, no crossJoin, no per-row window.
 
-    Requires an integral id column (the kernel materializes int64,
-    like apply_bpe_merges_arrow)."""
+    Requires an integral id column: the kernel materializes int64,
+    like apply_bpe_merges_arrow, so :func:`kmeans_assign` stays the
+    path for any other id type."""
     import numpy as np
     import pandas as pd
 
@@ -663,102 +664,30 @@ def pq_quantize(
     over codes is the standard asymmetric-distance lookup this repo's
     ANN operators would consume.
 
-    Plan shape: the codebook (KBs) is collected once and broadcast —
-    the only driver materialization, same policy as ivf_topk — then one
-    corpus scan: explode to (vector, subspace), broadcast-join the
-    codebook on subspace id, argmin via min_by aggregation per
-    (vector, subspace), and a pivot-free groupBy re-assembles codes in
-    subspace order. No shuffle touches raw vectors except the explode's
-    map-side fan-out; the groupBy keys are (id, j) then (id) — both
-    narrow rows.
-
-    Returns (``id_col``, codes STRING "c0,c1,...", recon_err DOUBLE
-    rounded to 6). Arithmetic is float32 inputs cast to double on both
-    engines, so the DuckDB oracle reproduces codes and error
-    bit-for-bit."""
-    spark = corpus.sparkSession
-    first = corpus.select(F.size(vec_col).alias("d")).first()
-    if first is None:
-        raise ValueError("pq_quantize: empty corpus")
-    dim = first["d"]
-    if dim % m:
-        raise ValueError(f"vector dim {dim} is not divisible by m={m}")
-    sub = dim // m
-    cb_rows = [
-        (int(r["j"]), int(r["cid"]), [float(x) for x in r["__cvec"]])
-        for r in pq_codebooks(corpus, vec_col, id_col, m, k).collect()
-    ]
-    cb = spark.createDataFrame(cb_rows, "j int, cid int, __cvec array<float>")
-
-    dvec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    subvecs = corpus.select(
-        F.col(id_col).alias("__rid"),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda j: F.struct(
-                    j.alias("j"),
-                    F.slice(dvec, j * sub + 1, sub).alias("__sv"),
-                ),
-            )
-        ).alias("__s"),
-    ).select("__rid", F.col("__s.j").alias("j"), F.col("__s.__sv").alias("__sv"))
-
-    scored = subvecs.join(F.broadcast(cb), "j").withColumn(
-        "__dist",
-        F.aggregate(
-            F.zip_with(
-                F.col("__sv"),
-                F.transform(F.col("__cvec"), lambda x: x.cast("double")),
-                lambda a, b: (a - b) * (a - b),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-    best = scored.groupBy("__rid", "j").agg(
-        F.min_by(
-            F.col("cid"), F.struct(F.col("__dist"), F.col("cid"))
-        ).alias("code"),
-        F.min("__dist").alias("__d"),
-    )
-    return best.groupBy("__rid").agg(
-        F.concat_ws(
-            ",",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("j", "code"))),
-                lambda s: s["code"].cast("string"),
-            ),
-        ).alias("codes"),
-        F.round(F.sum("__d"), 6).alias("recon_err"),
-    ).select(F.col("__rid").alias(id_col), "codes", "recon_err")
-
-
-def pq_quantize_arrow(
-    corpus: DataFrame,
-    vec_col: str,
-    id_col: str,
-    m: int = 4,
-    k: int = 16,
-) -> DataFrame:
-    """Arrow-batched twin of :func:`pq_quantize`: identical codes and
-    reconstruction errors (same codebook, same double arithmetic, ties
-    to the lowest cid via numpy argmin's first-match rule), but the
+    Plan shape: the codebook (:func:`pq_codebooks`, KBs) is collected
+    once and captured by the closure — the only driver
+    materialization, the same "model is small, data is not" policy as
+    ivf_topk — then ONE narrow corpus scan with no shuffle: the
     distance kernel runs as a vectorized (batch x k x dim/m) numpy
-    broadcast inside mapInPandas instead of per-row Catalyst
-    expressions. This is the documented exception to the
-    "builtin expressions first" rule: dense numeric kernels are where
-    Arrow-batched pandas beats expression trees (measured at the
-    synthetic sf10: see BASELINE.md §4) — the plan is one codebook
-    broadcast (closure capture, KBs) + one narrow corpus scan with NO
-    shuffle at all (the expression path shuffles twice to regroup its
-    exploded subspace rows)."""
+    broadcast inside mapInPandas. Dense numeric kernels are where
+    Arrow-batched pandas beats expression trees: an explode /
+    broadcast-join / min_by expression form of this operator measured
+    4.9x slower at the synthetic sf10 and shuffled twice (BASELINE.md
+    §4).
+
+    Returns (``id_col`` with its input type, codes STRING
+    "c0,c1,...", recon_err DOUBLE rounded to 6). Arithmetic is float32
+    inputs cast to double, ties go to the lowest cid (numpy argmin's
+    first-match rule), so the DuckDB oracle reproduces codes and error
+    bit-for-bit."""
     import numpy as np
     import pandas as pd
 
+    from pyspark.sql import types as T
+
     first = corpus.select(F.size(vec_col).alias("d")).first()
     if first is None:
-        raise ValueError("pq_quantize_arrow: empty corpus")
+        raise ValueError("pq_quantize: empty corpus")
     dim = first["d"]
     if dim % m:
         raise ValueError(f"vector dim {dim} is not divisible by m={m}")
@@ -792,9 +721,14 @@ def pq_quantize_arrow(
                 }
             )
 
-    return corpus.select(id_col, vec_col).mapInPandas(
-        batch, f"{id_col} long, codes string, recon_err double"
+    schema = T.StructType(
+        [
+            T.StructField(id_col, corpus.schema[id_col].dataType),
+            T.StructField("codes", T.StringType()),
+            T.StructField("recon_err", T.DoubleType()),
+        ]
     )
+    return corpus.select(id_col, vec_col).mapInPandas(batch, schema)
 
 
 def kcenter_coreset(

@@ -138,21 +138,20 @@ def bigram_stats_kernel(
     id_col: str,
     emit_unigrams: bool = True,
 ) -> DataFrame:
-    """Arrow-batched twin of the tokenize -> bigram-explode ->
+    """Arrow-batched form of the tokenize -> bigram-explode ->
     ``groupBy(doc, bg)`` reduction that both perplexity scorers share
-    — the r13 gopher-kernel precedent applied to the corpus-slowest
-    pair (lm/kn were ~45 s each at sf10, the builder's own-attributed
-    per-row-CPU saturation class). One ``mapInPandas`` pass emits
-    (doc, bg, m, ug): for ``ug = 0``, ``bg`` is a space-joined word
-    bigram and ``m`` its multiplicity in the document (exactly the
-    expression path's ``per`` frame, Counter-reduced in O(tokens) per
-    doc with ZERO shuffle — the expression path shuffles the full
-    bigram instance stream to build the same rows); for ``ug = 1``,
-    ``bg`` is a distinct token of the doc and ``m`` its count, giving
-    lm_perplexity its vocabulary census from the SAME pass instead of
-    a second corpus tokenize.
+    (lm/kn were ~45 s each at sf10 as Spark expressions, per-row-CPU
+    bound in the interpreted word_ngrams HOFs). One ``mapInPandas``
+    pass emits (doc, bg, m, ug): for ``ug = 0``, ``bg`` is a
+    space-joined word bigram and ``m`` its multiplicity in the
+    document, Counter-reduced in O(tokens) per doc with ZERO shuffle
+    (the expression reduction shuffles the full bigram instance
+    stream to build the same rows); for ``ug = 1``, ``bg`` is a
+    distinct token of the doc and ``m`` its count.
 
-    Parity is exact by construction: tokenization mirrors
+    The rows equal ``explode(word_ngrams(col, 2))`` grouped by (doc,
+    bg) exactly (pinned per frame, corpus plus tokenizer edge rows, in
+    tests/test_behavior_graph.py): tokenization mirrors
     functions.text.tokenize's Java semantics (space-only trim — Spark
     trim strips ASCII 0x20 only — then an ASCII-``\\s`` split that
     keeps empty edge tokens under limit=-1; Python's Unicode
@@ -164,9 +163,9 @@ def bigram_stats_kernel(
     by construction; for non-ASCII Spark falls back to Java
     String.toLowerCase() (JVM default locale) while Python uses
     Unicode default case conversion — these agree (verified by the
-    İ/ẞ/final-sigma/ǅ parity fixture) except under a locale with
-    bespoke case rules (e.g. Turkish dotted/dotless I), where the
-    expression path itself shifts and the kernel keeps the
+    İ/ẞ/final-sigma/ǅ edge fixture) except under a locale with
+    bespoke case rules (e.g. Turkish dotted/dotless I), where Spark's
+    ``lower`` itself shifts and the kernel keeps the
     locale-independent answer."""
     from pyspark.sql.types import (
         ByteType,
@@ -236,10 +235,10 @@ def bigram_count_partials(
     :func:`bigram_stats_kernel` for the COUNT-TABLE pass, where the
     doc id is irrelevant: emits (ug, bg, m) partials where ``m`` sums
     a gram's multiplicity across every document the Python worker has
-    seen since the last flush — the map-side combine the expression
-    path gets from Spark's hash aggregate, done in the Counter
-    itself. Downstream ``groupBy(ug, bg).sum(m)`` merges partials into
-    the exact global counts (integer sums — order-free), so the
+    seen since the last flush — the map-side combine Spark's hash
+    aggregate would give, done in the Counter itself. Downstream
+    ``groupBy(ug, bg).sum(m)`` merges partials into the exact global
+    counts (integer sums — order-free), so the
     shuffle input is near-vocabulary-scale instead of
     per-document-scale. ``flush_keys`` caps the in-heap Counter (a
     128 MB text split can hold ~10M distinct bigrams — an unbounded
@@ -311,7 +310,6 @@ def lm_perplexity_scores(
     k: float = 0.5,
     dp: int = 6,
     pin_counts: bool = True,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """Bigram-language-model quality scoring, the CCNet-style corpus
     filter: train add-k-smoothed bigram statistics on the corpus, score
@@ -327,74 +325,41 @@ def lm_perplexity_scores(
     on a SQL engine; see the in-code note on why the per-bigram
     log-prob must NOT be.
 
-    Scale shape (rewritten after the 4-scan version measured 7.7 s at
-    sf0.1 — this one is the same algebra with the tokenize pass paid
-    twice, not four times): the bigram instance stream is immediately
-    reduced to distinct (doc, bigram, multiplicity) — one exchange that
-    Spark's ReuseExchange then SHARES between the training branch and
-    the scoring branch, so the corpus is tokenized/exploded exactly
-    once for all bigram statistics. Global bigram counts aggregate the
-    reduced stream; context counts c(w1.) derive from the bigram count
-    table itself (sum of c12 grouped by first word — a vocabulary-sized
-    input, not a third corpus pass). Scoring joins the reduced stream
-    (not the instance stream) to the count tables, and the per-doc
-    average is the multiplicity-weighted mean sum(m*lp)/sum(m) —
-    algebraically the instance mean, ~ulp-identical in float. The only
-    other corpus pass is the vocabulary countDistinct (V counts ALL
-    tokens, including the final token of each document, which the
-    bigram-start table misses — so it cannot be derived from c12).
+    Scale shape: TWO Arrow passes over the corpus, no bigram
+    instance-stream shuffle and no interpreted HOFs. Pass 1
+    (:func:`bigram_count_partials`) feeds ONE vocabulary-scale count
+    table grouped by (ug, bg) — the bigram counts c12 AND the unigram
+    census from the same shuffle (V = the unigram row count: the table
+    is grouped by token, so counting rows IS countDistinct, and it
+    includes each document's final token, which the bigram-start table
+    misses). Pass 2 (:func:`bigram_stats_kernel`) is the per-document
+    (doc, bg, m) scoring stream. Context counts c(w1.) derive from c12
+    (a vocabulary-sized input, not a third corpus pass), and the
+    per-doc average is the multiplicity-weighted mean sum(m*lp)/sum(m)
+    — algebraically the instance mean, ~ulp-identical in float. The
+    DuckDB oracle of ``text_lm_perplexity`` is the declarative spec.
     """
-    from stockpy_spark.functions.text import word_ngrams
-
-    if use_kernel:
-        # the r14 kernel path (see bigram_stats_kernel): TWO Arrow
-        # passes total. Pass 1 feeds ONE vocab-scale count table
-        # grouped by (ug, bg) — the bigram counts AND the unigram
-        # census from the same shuffle, so c12 and V split off a
-        # single pinned frame (V = the unigram row count: the table
-        # is grouped by token, so counting rows IS countDistinct).
-        # Pass 2 is the scoring stream, unigram rows not emitted.
-        # No instance-stream shuffle (the Counter reduces per doc),
-        # no interpreted HOFs. Bit-exact parity with the expression
-        # path is pytest-pinned (test_behavior_graph corpus+edges).
-        counts = bigram_count_partials(
-            df, text_col, emit_unigrams=True
-        ).groupBy("ug", "bg").agg(F.sum("m").alias("c12"))
-        if pin_counts:
-            counts = counts.transform(pin)
-        c12 = counts.where(F.col("ug") == 0).select("bg", "c12")
-        vocab = (
-            counts.where(F.col("ug") == 1)
-            .agg(F.count(F.lit(1)).alias("V"))
-        )
-        per = bigram_stats_kernel(
-            df, text_col, id_col, emit_unigrams=False
-        ).select("doc", "bg", "m")
-    else:
-        big = df.select(
-            F.col(id_col).alias("doc"),
-            F.explode(word_ngrams(F.col(text_col), 2)).alias("bg"),
-        )
-        per = big.groupBy("doc", "bg").agg(F.count(F.lit(1)).alias("m"))
-        vocab = df.select(
-            F.explode(tokenize(F.lower(F.col(text_col)))).alias("w")
-        ).agg(F.countDistinct("w").alias("V"))
-        # distinct-collapse checkpoint (r12 dominance criterion, found
-        # by kn_perplexity_scores' decade spot and confirmed here by
-        # the same A/B): c12 is bigram-vocabulary-sized and feeds BOTH
-        # the context branch and the scoring join — unpinned, each
-        # consumer replans the corpus tokenize + both aggregates (the
-        # ReuseExchange sharing the docstring's r6 rewrite counted on
-        # does not survive this shape at runtime). Measured at the
-        # synthetic sf1: 16.48 s -> 6.80 s; the sf10 decade spot is in
-        # BASELINE.md §4. EAGER side effect: the pin runs the
-        # count-table jobs AT PLAN-BUILD TIME (r12 advisor);
-        # pin_counts=False restores the lazy contract at the cost of
-        # the per-consumer recompute and the per-materialization
-        # determinism caveat (operators/pinning.py).
-        c12 = per.groupBy("bg").agg(F.sum("m").alias("c12"))
-        if pin_counts:
-            c12 = c12.transform(pin)
+    counts = bigram_count_partials(
+        df, text_col, emit_unigrams=True
+    ).groupBy("ug", "bg").agg(F.sum("m").alias("c12"))
+    # distinct-collapse checkpoint (r12 dominance criterion; the sf1
+    # and sf10 measurements are in BASELINE.md §4): the count table is
+    # vocabulary-sized and feeds the context branch, the scoring join
+    # and V — unpinned, each consumer replans the corpus pass and its
+    # aggregate. EAGER side effect: the pin runs the count-table jobs
+    # AT PLAN-BUILD TIME; pin_counts=False restores the lazy contract
+    # at the cost of the per-consumer recompute and the
+    # per-materialization determinism caveat (operators/pinning.py).
+    if pin_counts:
+        counts = counts.transform(pin)
+    c12 = counts.where(F.col("ug") == 0).select("bg", "c12")
+    vocab = (
+        counts.where(F.col("ug") == 1)
+        .agg(F.count(F.lit(1)).alias("V"))
+    )
+    per = bigram_stats_kernel(
+        df, text_col, id_col, emit_unigrams=False
+    ).select("doc", "bg", "m")
     c1 = (
         c12.select(
             F.split_part(F.col("bg"), F.lit(" "), F.lit(1)).alias("w1"),
@@ -760,7 +725,6 @@ def kn_perplexity_scores(
     discount: float = 0.75,
     dp: int = 6,
     pin_counts: bool = True,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """Interpolated Kneser-Ney bigram perplexity (Kneser & Ney 1995;
     Chen & Goodman 1999's interpolated form with a fixed discount) —
@@ -784,41 +748,25 @@ def kn_perplexity_scores(
     ``dp`` (the per-bigram lp stays unrounded — see lm_perplexity's
     in-code note on systematic half-boundary hits).
 
-    Scale shape, same skeleton as lm_perplexity: the bigram instance
-    stream reduces once to (doc, bg, m) — the exchange ReuseExchange
-    shares between training and scoring; ALL model tables derive from
-    the c12 count table (context counts, continuation counts, the
-    1-row distinct-bigram census), so the corpus is tokenized exactly
-    once and everything downstream is vocabulary-scale. Every lp
-    input is integer-built (D = 0.75 is exact binary), so both
-    engines compute identical doubles term for term.
+    Scale shape, same skeleton as lm_perplexity: the per-document
+    (doc, bg, m) scoring stream comes from :func:`bigram_stats_kernel`
+    and the count table from :func:`bigram_count_partials`' partition
+    partials (map-side combined in the Counter, so its shuffle is
+    near-vocabulary-scale); no unigram census is needed, since ALL
+    model tables derive from c12 (context counts, continuation
+    counts, the 1-row distinct-bigram census). Every lp input is
+    integer-built (D = 0.75 is exact binary), so Spark and the DuckDB
+    oracle of ``text_kn_perplexity`` compute identical doubles term
+    for term.
     """
-    from stockpy_spark.functions.text import word_ngrams
-
-    if use_kernel:
-        # r14 kernel path — see bigram_stats_kernel: the Counter
-        # reduction replaces the bigram instance-stream shuffle and
-        # the interpreted word_ngrams HOFs; no unigram census needed
-        # here (every KN model table derives from c12). The count
-        # table aggregates partition-level PARTIALS (map-side combine
-        # done in the Counter — bigram_count_partials), so its shuffle
-        # is near-vocabulary-scale; the scoring stream keeps per-doc
-        # rows, the unit the final aggregate needs.
-        per = bigram_stats_kernel(
-            df, text_col, id_col, emit_unigrams=False
-        ).select("doc", "bg", "m")
-        c12_base = (
-            bigram_count_partials(df, text_col, emit_unigrams=False)
-            .groupBy("bg")
-            .agg(F.sum("m").alias("c12"))
-        )
-    else:
-        big = df.select(
-            F.col(id_col).alias("doc"),
-            F.explode(word_ngrams(F.col(text_col), 2)).alias("bg"),
-        )
-        per = big.groupBy("doc", "bg").agg(F.count(F.lit(1)).alias("m"))
-        c12_base = per.groupBy("bg").agg(F.sum("m").alias("c12"))
+    per = bigram_stats_kernel(
+        df, text_col, id_col, emit_unigrams=False
+    ).select("doc", "bg", "m")
+    c12_base = (
+        bigram_count_partials(df, text_col, emit_unigrams=False)
+        .groupBy("bg")
+        .agg(F.sum("m").alias("c12"))
+    )
     c12 = (
         c12_base
         .select(

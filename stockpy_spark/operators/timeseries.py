@@ -669,63 +669,6 @@ def seasonal_outlier_counts(
     )
 
 
-def ewma_by_key_arrow(
-    df: DataFrame,
-    key_col: str,
-    value_col: str,
-    order_cols: list[str],
-    alpha: float = 0.1,
-    dp: int = 8,
-) -> DataFrame:
-    """Per-key EWMA s = alpha*v + (1-alpha)*s as an Arrow kernel:
-    applyInPandas per key, rows sorted by ``order_cols``, the recurrence
-    evaluated by pandas' C ``ewm(adjust=False)`` loop.
-
-    **Measured counter-example, kept deliberately**: this kernel LOSES
-    to the registry's interpreted expression fold at every decade
-    (sf0.1 3.2 vs 0.8 s, synthetic sf10 25.2 vs 2.4 s — BASELINE.md
-    §4). The Arrow rule that won 41x for semantic dedup and 19x for
-    BPE is about dense per-ROW math amortized over large batches; EWMA
-    is per-KEY dispatch over MANY SMALL series (~15k users x ~600
-    events at sf10), where applyInPandas pays a pandas-group fixed
-    cost per key that swamps the C scan it buys. The boundary, stated
-    from both sides: kernels win when work per Python dispatch is
-    large (one matmul per batch), lose when the group grain is small —
-    there the JVM fold's per-element interpreter is still cheaper than
-    per-group interpreter setup. Use the fold unless series are long.
-
-    Parity note: pandas' old-weight is ``1 - alpha`` in doubles, the
-    fold uses the literal complement, differing in the last ulp for
-    alpha=0.1 — agreement is ~1e-15 relative (tolerance-tested), not
-    bit-guaranteed. NULL values drop per series; NULL ``order_cols``
-    must be filtered upstream (cross-engine null ordering is undefined
-    — see q_ts_ewma's contract).
-
-    Returns (key, n_events, ewma).
-    """
-    import pandas as pd
-
-    out_schema = f"{key_col} long, n_events long, ewma double"
-
-    def series(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(order_cols)
-        vals = pdf[value_col].dropna()
-        e = vals.ewm(alpha=alpha, adjust=False).mean().iloc[-1]
-        return pd.DataFrame(
-            {
-                key_col: [pdf[key_col].iloc[0]],
-                "n_events": [int(len(vals))],
-                "ewma": [round(float(e), dp)],
-            }
-        )
-
-    return (
-        df.select(key_col, value_col, *order_cols)
-        .groupBy(key_col)
-        .applyInPandas(series, out_schema)
-    )
-
-
 def autocorrelation_by_key(
     df: DataFrame,
     key_col: str,

@@ -1553,21 +1553,17 @@ def q_text_gopher_repetition(spark, sf_dir):
     """Gopher within-doc repetition battery (operators/gopher.py
     gopher_repetition_profile): char-weighted top-{2,3,4}-gram and
     duplicated-{5,10}-gram coverage fractions per document — the Rae
-    et al. 2021 repetition filters. r13: served by the Arrow KERNEL
-    twin (gopher_repetition_profile_kernel) — this was the corpus-
-    worst CPU query since r11 because every HOF in the expression
-    path is CodegenFallback (interpreted) and its count pass is
-    O(nt^2)/doc; the kernel computes the identical statistics with a
-    Counter in one mapInPandas (O(nt)/doc, Arrow-batched, still a
-    zero-shuffle narrow map). Measured 25.4 s -> 1.5 s at sf1 and
-    parity is BIT-EXACT (integer arithmetic + Decimal HALF_UP
-    rounding = Spark's round; corpus-wide parity pytest). The
-    expression path remains the library reference, parity-pinned.
+    et al. 2021 repetition filters. The operator is one zero-shuffle
+    mapInPandas pass counting grams with a Counter (O(nt)/doc); the
+    Spark higher-order-function form it replaced was the corpus-worst
+    CPU query (O(nt^2)/doc, every HOF interpreted): 25.4 s -> 1.5 s at
+    sf1. Values are exact: integer arithmetic plus Decimal HALF_UP
+    rounding, which is Spark's round.
     The oracle replays gram counting, the (count DESC, gram ASC)
     top-gram election, and the overlap-safe char union via a
     distinct-position grid, so two radically different computations
     must agree to 6dp on every doc."""
-    from stockpy_spark.operators.gopher import gopher_repetition_profile_kernel
+    from stockpy_spark.operators.gopher import gopher_repetition_profile
 
     docs = _t(spark, sf_dir, "documents")
     # per-doc CPU: a single small parquet file yields ONE input split
@@ -1576,7 +1572,7 @@ def q_text_gopher_repetition(spark, sf_dir):
     # operator itself stays a zero-shuffle narrow map.
     if docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
         docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    return gopher_repetition_profile_kernel(docs, "text", "doc_id")
+    return gopher_repetition_profile(docs, "text", "doc_id")
 
 
 SQL_TEXT_GOPHER = r"""

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from stockpy_spark.operators.chunking import chunk_documents
 from stockpy_spark.operators.dedup import incremental_dedup_admit
 from stockpy_spark.operators.sketches import hll_rollup_quality
-from stockpy_spark.operators.similarity import pq_quantize_arrow
+from stockpy_spark.operators.similarity import pq_quantize
 from stockpy_spark.operators.timeseries import interval_concurrency
 from stockpy_spark.registry_ext import (
     _STOP_SQL,
@@ -165,15 +165,14 @@ FROM wk GROUP BY bucket_epoch
 def q_emb_pq_codes(spark, sf_dir):
     """PQ-compress every embedding: 64 float dims -> 4 codebook ids
     (16-entry codebooks per 16-dim subspace) + reconstruction error.
-    Runs the Arrow-batched kernel (pq_quantize_arrow — bit-identical to
-    the expression path pq_quantize, pytest-pinned, and 4.9x faster at
-    the synthetic sf10: 4.76 -> 0.97 s, BASELINE.md §4). Deterministic
-    lowest-id seeds keep the whole quantization under an exact SQL
-    oracle."""
+    pq_quantize runs one Arrow-batched numpy pass with no shuffle
+    (4.9x faster at the synthetic sf10 than an expression-tree form,
+    4.76 -> 0.97 s, BASELINE.md §4). Deterministic lowest-id seeds
+    keep the whole quantization under an exact SQL oracle."""
     emb = _t(spark, sf_dir, "embeddings").where(
         F.col("embedding").isNotNull()
     )
-    return pq_quantize_arrow(emb, "embedding", "vec_id", m=4, k=16)
+    return pq_quantize(emb, "embedding", "vec_id", m=4, k=16)
 
 
 # Mirror: seeds = 16 lowest vec_id rows; cid = rank - 1; per (vec, j)

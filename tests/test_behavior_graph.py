@@ -237,12 +237,15 @@ class TestLMPerplexity:
 
 
 class TestBigramKernelParity:
-    """r14: lm/kn serve bigram_stats_kernel — the Arrow twin of the
-    tokenize -> bigram-explode -> groupBy(doc, bg) pass. Kernel and
-    expression paths must be BIT-IDENTICAL over the real corpus plus
-    the tokenizer edge fixtures (NBSP/thin-space are token chars under
-    Java \\s; leading tabs survive the space-only trim and make empty
-    edge tokens; 1-token and empty docs emit nothing)."""
+    """lm/kn perplexity run bigram_stats_kernel (per-doc rows) and
+    bigram_count_partials (the count table) — the Arrow form of the
+    tokenize -> bigram-explode -> groupBy(doc, bg) pass. Both must be
+    BIT-IDENTICAL to that Spark-expression reduction, written inline
+    in the test, over the real corpus plus the tokenizer edge fixtures
+    (NBSP/thin-space are token chars under Java \\s; leading tabs
+    survive the space-only trim and make empty edge tokens; 1-token
+    and empty docs emit nothing). The scores built on them are checked
+    against the DuckDB oracles (tests/test_oracle_gate.py)."""
 
     EDGE = [
         (900001, None),
@@ -266,58 +269,53 @@ class TestBigramKernelParity:
         (900011, "İstanbul ẞTRASSE ΣΊΣΥΦΟΣ ǄUNGLA İstanbul STRASSE"),
     ]
 
-    def _both(self, spark, sf_dir, fn, value_cols):
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        edge = spark.createDataFrame(self.EDGE, "doc_id long, text string")
-        both = docs.select("doc_id", "text").unionByName(edge)
-        a = sorted(
-            tuple(r)
-            for r in fn(both, "text", "doc_id", use_kernel=False).collect()
-        )
-        b = sorted(
-            tuple(r)
-            for r in fn(both, "text", "doc_id", use_kernel=True).collect()
-        )
-        return a, b
-
-    def test_lm_parity_bit_exact(self, spark, sf_dir):
-        from stockpy_spark.operators.textstats import lm_perplexity_scores
-
-        a, b = self._both(spark, sf_dir, lm_perplexity_scores, 4)
-        assert a == b
-
-    def test_kn_parity_bit_exact(self, spark, sf_dir):
-        from stockpy_spark.operators.textstats import kn_perplexity_scores
-
-        a, b = self._both(spark, sf_dir, kn_perplexity_scores, 4)
-        assert a == b
-
-    def test_kernel_frame_matches_expression_per_frame(self, spark):
+    def test_kernel_frame_matches_expression_per_frame(self, spark, sf_dir):
         """The kernel's (doc, bg, m) rows are EXACTLY the expression
-        path's groupBy(doc, bg) reduction, and its ug=1 rows carry the
-        per-doc token census (incl. the final token lm's V needs)."""
+        groupBy(doc, bg) reduction, the count partials sum to its
+        per-bigram c12, and the ug=1 rows carry the per-doc token
+        census (incl. the final token lm's V needs)."""
         from pyspark.sql import functions as F
 
         from stockpy_spark.functions.text import tokenize, word_ngrams
-        from stockpy_spark.operators.textstats import bigram_stats_kernel
-
-        df = spark.createDataFrame(self.EDGE, "doc_id long, text string")
-        kb = bigram_stats_kernel(df, "text", "doc_id").cache()
-        got_bg = sorted(
-            (r.doc, r.bg, r.m)
-            for r in kb.where("ug = 0").collect()
+        from stockpy_spark.operators.textstats import (
+            bigram_count_partials,
+            bigram_stats_kernel,
         )
-        want_bg = sorted(
-            (r.doc, r.bg, r.m)
-            for r in df.select(
+
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        edge = spark.createDataFrame(self.EDGE, "doc_id long, text string")
+        df = docs.select("doc_id", "text").unionByName(edge)
+        per = (
+            df.select(
                 F.col("doc_id").alias("doc"),
                 F.explode(word_ngrams(F.col("text"), 2)).alias("bg"),
             )
             .groupBy("doc", "bg")
             .agg(F.count(F.lit(1)).alias("m"))
+            .cache()
+        )
+        kb = bigram_stats_kernel(df, "text", "doc_id").cache()
+        got_bg = sorted(
+            (r.doc, r.bg, r.m)
+            for r in kb.where("ug = 0").collect()
+        )
+        want_bg = sorted((r.doc, r.bg, r.m) for r in per.collect())
+        assert got_bg == want_bg
+        # flush_keys=64 forces several flushes per worker, so the
+        # partials really are merged by the downstream sum
+        got_c12 = sorted(
+            (r.bg, r.c12)
+            for r in bigram_count_partials(df, "text", flush_keys=64)
+            .where("ug = 0")
+            .groupBy("bg")
+            .agg(F.sum("m").alias("c12"))
             .collect()
         )
-        assert got_bg == want_bg
+        want_c12 = sorted(
+            (r.bg, r.c12)
+            for r in per.groupBy("bg").agg(F.sum("m").alias("c12")).collect()
+        )
+        assert got_c12 == want_c12
         got_v = kb.where("ug = 1").agg(
             F.countDistinct("bg").alias("V")
         ).collect()[0].V

@@ -10,6 +10,13 @@ rank tier (``stats.RANK_LITERAL_MAX = 0``), which the default literal
 tier hides at this scale factor; and the extract_stocks pipeline under
 both plans of ``joins.dim_preserving_enrich`` (the fact broadcast at
 the default threshold, the two-pass plan with broadcasting off).
+
+Also covers the text and vector operators that keep one
+implementation each — Gopher repetition, LM and Kneser-Ney perplexity,
+DSIR weights, PQ codes and the EWMA fold. For these the DuckDB oracle
+is the declarative spec, the role a second in-engine implementation
+used to play; the tokenizer and rounding edge rows stay pinned next to
+each operator's own tests.
 """
 
 from __future__ import annotations
@@ -39,6 +46,13 @@ _GATED = [
     "decontaminate_fuzzy",
     # joins.dim_preserving_enrich, broadcast-fact plan
     "pipeline_extract_stocks",
+    # one implementation per operator, the oracle as the spec
+    "text_gopher_repetition",
+    "text_lm_perplexity",
+    "text_kn_perplexity",
+    "sample_dsir_weights",
+    "emb_pq_codes",
+    "ts_ewma",
 ]
 _NO_BROADCAST = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
 

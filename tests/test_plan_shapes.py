@@ -305,15 +305,17 @@ def test_hll_sketches_partial_agg_before_exchange(spark):
     assert "Exchange" in p[first_agg:]
 
 
-def test_pq_quantize_broadcasts_codebook_no_nested_loop(spark):
-    """PQ assignment joins every subvector against the KB-sized
-    codebook: must be a broadcast hash join on the subspace id, never
-    a nested loop / cartesian."""
+def test_pq_quantize_is_one_narrow_map(spark):
+    """PQ assignment is ONE narrow map over the corpus scan: the
+    KB-sized codebook rides in the closure, so the plan has a single
+    MapInPandas over a single parquet scan and no exchange, nested
+    loop or cartesian anywhere."""
     from stockpy_spark.operators.similarity import pq_quantize
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     p = plan(pq_quantize(emb, "embedding", "vec_id", m=4, k=8), "simple")
-    assert "BroadcastHashJoin" in p
+    assert p.count("MapInPandas") == 1 and p.count("FileScan parquet") == 1
+    assert "Exchange" not in p
     assert "BroadcastNestedLoopJoin" not in p and "CartesianProduct" not in p
 
 

@@ -134,6 +134,8 @@ def test_pq_quantize_seeds_reconstruct_exactly(spark):
 
     with pytest.raises(ValueError, match="divisible"):
         pq_quantize(vecs, "embedding", "vec_id", m=3, k=4)
+    with pytest.raises(ValueError, match="empty corpus"):
+        pq_quantize(vecs.limit(0), "embedding", "vec_id", m=2, k=16)
 
 
 def test_incremental_dedup_admit_stages(spark):
@@ -233,33 +235,44 @@ def test_word_jaccard_verify_tier_guard(spark):
     ).count() >= 0
 
 
-def test_pq_arrow_equals_expression_path(spark):
-    """The Arrow-batched PQ kernel must be bit-identical to the
-    expression-tree path (same codebook, same double arithmetic, same
-    lowest-cid tie rule) — this equality is what lets the registry
-    query take the 4.9x-faster kernel while keeping the exact SQL
-    oracle."""
-    from stockpy_spark.operators.similarity import (
-        pq_quantize,
-        pq_quantize_arrow,
-    )
+@pytest.mark.parametrize(
+    "id_type, make_id", [("string", "v{}".format), ("int", int), ("bigint", int)]
+)
+def test_pq_quantize_keeps_id_type_and_codes(spark, id_type, make_id):
+    """pq_quantize returns the id column with its input type and the
+    codes a plain-Python reference computes: the seeds are the k
+    lowest ids in the id type's own order, each subspace code is the
+    first argmin of the squared L2 distance, and recon_err sums the
+    minima over subspaces (integer-valued here, so exact)."""
+    from stockpy_spark.operators.similarity import pq_quantize
 
+    m, k, dim = 3, 8, 12
+    rows = [
+        (make_id(i), [float((i * 37 + p * 11) % 251) for p in range(dim)])
+        for i in range(60)
+    ]
     vecs = spark.createDataFrame(
-        [
-            (i, [float((i * 37 + p * 11) % 251) for p in range(12)])
-            for i in range(60)
-        ],
-        "vec_id long, embedding array<float>",
+        rows, f"vec_id {id_type}, embedding array<float>"
     )
-    a = {
-        r.vec_id: (r.codes, r.recon_err)
-        for r in pq_quantize(vecs, "embedding", "vec_id", m=3, k=8).collect()
-    }
-    b = {
-        r.vec_id: (r.codes, r.recon_err)
-        for r in pq_quantize_arrow(vecs, "embedding", "vec_id", m=3, k=8).collect()
-    }
-    assert a == b and len(a) == 60
+    out = pq_quantize(vecs, "embedding", "vec_id", m=m, k=k)
+    assert out.schema["vec_id"].dataType.simpleString() == id_type
+
+    sub = dim // m
+    seeds = [v for _, v in sorted(rows)[:k]]
+    want = {}
+    for vid, v in rows:
+        codes, err = [], 0.0
+        for j in range(m):
+            lo, hi = j * sub, (j + 1) * sub
+            d = [
+                sum((a - b) ** 2 for a, b in zip(v[lo:hi], s[lo:hi]))
+                for s in seeds
+            ]
+            codes.append(d.index(min(d)))
+            err += min(d)
+        want[vid] = (",".join(map(str, codes)), err)
+    got = {r.vec_id: (r.codes, r.recon_err) for r in out.collect()}
+    assert got == want
 
 
 def test_zorder_layout_tightens_all_dimensions(spark, tmp_path):

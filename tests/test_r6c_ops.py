@@ -687,18 +687,17 @@ def test_null_text_docs_survive_line_ops(spark):
     assert dd[2].text == "" and dd[2].n_dropped == 0
 
 
-def test_gopher_repetition_kernel_parity_bit_exact(spark, sf_dir):
-    """The Arrow kernel twin must be BIT-IDENTICAL to the expression
-    path (r13: the registered query now serves the kernel — measured
-    25.4 s -> 1.5 s at sf1): real corpus plus the edge fixtures
-    (empty/NULL text, doc shorter than every n, all-identical tokens,
-    tie-broken top gram)."""
-    from stockpy_spark.operators.gopher import (
-        gopher_repetition_profile,
-        gopher_repetition_profile_kernel,
-    )
+def test_gopher_repetition_edge_rows_bit_exact(spark):
+    """gopher_repetition_profile on the tokenizer and rounding edge
+    fixtures (empty/NULL text, doc shorter than every n, all-identical
+    tokens, tie-broken top gram, Java-\\s tokenization, a HALF_UP
+    tie) must return exactly these rows. They were recorded from the
+    Spark higher-order-function implementation at commit 535e7fe,
+    which agreed with the served Arrow pass bit for bit there; the
+    corpus rows are checked against the DuckDB oracle
+    (tests/test_oracle_gate.py)."""
+    from stockpy_spark.operators.gopher import gopher_repetition_profile
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     edge = spark.createDataFrame(
         [
             (100001, None),
@@ -706,10 +705,11 @@ def test_gopher_repetition_kernel_parity_bit_exact(spark, sf_dir):
             (100003, "one"),
             (100004, "spam spam spam spam spam spam spam spam spam spam spam"),
             (100005, "b a b a c d e f g h i j k l m n o p q r"),
-            # r13 advisor: Java \s is ASCII-only — NBSP, thin space,
-            # and \x1c-\x1f are Unicode whitespace to Python's
-            # .split() but TOKEN CHARS to the expression path; \x1f
-            # is trim-stripped (<=0x20) but not a \s separator.
+            # Java \s is ASCII-only — NBSP, thin space, and
+            # \x1c-\x1f are Unicode whitespace to Python's .split()
+            # but TOKEN CHARS to Spark's split; trim strips only
+            # ASCII space, so the edge \x1f stays in its token
+            # (31 chars over 9 tokens below).
             (100006, "foo bar foo bar foo bar baz qux"),
             (100007, "a b a b a b a b a b x"),
             (100008, "\x1fpad pad\x1c pad pad pad pad pad pad tail\x1f"),
@@ -727,7 +727,21 @@ def test_gopher_repetition_kernel_parity_bit_exact(spark, sf_dir):
         ],
         "doc_id long, text string",
     )
-    both = docs.select("doc_id", "text").unionByName(edge)
-    a = sorted(tuple(r) for r in gopher_repetition_profile(both, "text", "doc_id").collect())
-    b = sorted(tuple(r) for r in gopher_repetition_profile_kernel(both, "text", "doc_id").collect())
-    assert a == b
+    got = sorted(
+        tuple(r)
+        for r in gopher_repetition_profile(edge, "text", "doc_id").collect()
+    )
+    # (doc_id, n_tokens, total_chars, top2, top3, top4, dup5, dup10)
+    assert got == [
+        (100001, 0, 0, 0.0, 0.0, 0.0, 0.0, 0.0),
+        (100002, 0, 0, 0.0, 0.0, 0.0, 0.0, 0.0),
+        (100003, 1, 3, 0.0, 0.0, 0.0, 0.0, 0.0),
+        (100004, 11, 44, 1.0, 1.0, 1.0, 1.0, 1.0),
+        (100005, 20, 20, 0.2, 0.15, 0.2, 0.0, 0.0),
+        (100006, 5, 27, 0.777778, 0.481481, 0.740741, 0.0, 0.0),
+        (100007, 6, 16, 0.9375, 0.9375, 0.9375, 0.0, 0.0),
+        (100008, 9, 31, 0.580645, 0.580645, 0.580645, 0.580645, 0.0),
+        (100009, 1, 1, 0.0, 0.0, 0.0, 0.0, 0.0),
+        (100010, 12, 32000, 0.000125, 0.000188, 0.00025, 0.000313, 0.0),
+        (100011, 8, 18, 1.0, 0.833333, 1.0, 0.0, 0.0),
+    ]

@@ -369,34 +369,6 @@ def test_seasonal_outlier_counts_distinguishes_phase(spark):
     assert out[p0 + 1].n == 7 and out[p0].n == 6
 
 
-def test_ewma_arrow_matches_fold_within_ulp_tolerance(spark):
-    """The Arrow EWMA kernel agrees with the registry's expression fold
-    on every fixture user (bit-equal after round-8 here; the documented
-    contract is 1e-12 relative — pandas' 1-alpha complement differs
-    from the fold's literal in the last ulp)."""
-    from stockpy_spark.operators.timeseries import ewma_by_key_arrow
-    from stockpy_spark.registry import QUERIES
-
-    fold = {r.user_id: (r.n_events, r.ewma)
-            for r in QUERIES["ts_ewma"](spark, "/root/testdata/sf0.001").collect()}
-    from pyspark.sql import functions as F
-    from stockpy_spark.sources.testdata import read_events
-
-    ev = read_events(spark, "/root/testdata/sf0.001").where(
-        F.col("user_id").isNotNull()
-        & F.col("value").isNotNull()
-        & F.col("ts").isNotNull()
-    )
-    arrow = {r.user_id: (r.n_events, r.ewma)
-             for r in ewma_by_key_arrow(
-                 ev, "user_id", "value", ["ts", "event_id"]).collect()}
-    assert set(fold) == set(arrow) and len(fold) > 0
-    for uid, (n_f, e_f) in fold.items():
-        n_a, e_a = arrow[uid]
-        assert n_a == n_f
-        assert abs(e_a - e_f) <= 1e-12 * max(1.0, abs(e_f)), uid
-
-
 def test_seasonal_outlier_counts_singleton_key_zero_not_null(spark):
     """A key with exactly one row has NULL stddev_samp; the outlier
     predicate is then NULL per row and an uncoalesced SUM would return

@@ -145,16 +145,20 @@ def test_dsir_weights_sign_structure_and_topk(spark):
 
 
 def test_dsir_kernel_parity_bit_exact(spark, sf_dir):
-    """r14: dsir_importance_weights serves the Arrow kernels
-    (dsir_bucket_partials for the stats branch, dsir_bucket_doc_counts
-    for scoring). Kernel and expression paths must be BIT-IDENTICAL
-    over the real corpus plus the tokenizer/bucket edge fixtures —
-    same md5 bucketing, same Java-\\s tokenization, zero-bigram docs
-    carried, per-bucket multiplicity sums replaying the per-instance
-    sums exactly after the dp=6 round."""
+    """dsir_importance_weights tokenizes the corpus once, through the
+    dsir_bucket_doc_counts Arrow kernel. Its (id, tgt, bucket, cnt)
+    rows must be BIT-IDENTICAL to the Spark-expression reduction
+    written inline here — explode_outer(word_ngrams(text, 2)), bucketed
+    by dsir._bucket, counted per (doc, bucket) — over the real corpus
+    plus the tokenizer/bucket edge fixtures: same md5 bucketing, same
+    Java-\\s tokenization (NBSP and \\x1c/\\x1f are token chars,
+    leading tabs survive the space-only trim), zero-bigram docs carried
+    as one (id, tgt, NULL, 0) row. The weights downstream are checked
+    against the DuckDB oracle (tests/test_oracle_gate.py)."""
     from pyspark.sql import functions as F
 
-    from stockpy_spark.operators.dsir import dsir_importance_weights
+    from stockpy_spark.functions.text import word_ngrams
+    from stockpy_spark.operators.dsir import _bucket, dsir_bucket_doc_counts
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     edge = spark.createDataFrame(
@@ -165,24 +169,44 @@ def test_dsir_kernel_parity_bit_exact(spark, sf_dir):
             (900004, "nb\xa0sp stays one token nb\xa0sp stays"),
             (900005, "\tedge tab edge tab\t"),
             (900006, "rep rep rep rep rep rep rep rep"),
+            (900007, "\x1fsep\x1c not sep\x1c not\x1f"),
+            (900010, "İstanbul ẞTRASSE ΣΊΣΥΦΟΣ İstanbul STRASSE"),
+            (900020, " "),
         ],
         "doc_id long, text string",
     )
     both = docs.select("doc_id", "text").unionByName(edge)
     tgt = F.col("doc_id") % 10 == 0
-    a = sorted(
+    n_buckets, salt = 1024, "dsir"
+    got = sorted(
         tuple(r)
-        for r in dsir_importance_weights(
-            both, "text", "doc_id", tgt, use_kernel=False
+        for r in dsir_bucket_doc_counts(
+            both, "text", "doc_id", tgt, n_buckets, salt
         ).collect()
     )
-    b = sorted(
+    want = sorted(
         tuple(r)
-        for r in dsir_importance_weights(
-            both, "text", "doc_id", tgt, use_kernel=True
-        ).collect()
+        for r in both.select(
+            F.col("doc_id").alias("__id"),
+            tgt.alias("__tgt"),
+            F.explode_outer(word_ngrams("text", 2)).alias("__gram"),
+        )
+        .groupBy(
+            "__id",
+            "__tgt",
+            F.when(
+                F.col("__gram").isNotNull(),
+                _bucket(F.col("__gram"), n_buckets, salt),
+            ).alias("__b"),
+        )
+        .agg(F.count("__gram").alias("__cnt"))
+        .collect()
     )
-    assert a == b
+    assert got == want
+    # the fixtures reach both sides of the target split and the
+    # zero-bigram row shape
+    assert {r[1] for r in got if r[0] >= 900001} == {False, True}
+    assert (900001, False, None, 0) in got
 
 
 def test_web_domain_filter_parse_block_and_cap(spark):
