@@ -5,8 +5,8 @@ queries()      -> name -> (spark, sf_dir) -> DataFrame, one per operator
                   implemented from SURVEY.md §2 (+ extensions).
 oracle_sql()   -> name -> ANSI SQL for DuckDB on the same parquet views.
 
-Implementations live in stockpy_spark/registry_core.py and
-registry_ext.py; this module is a thin adapter.
+Implementations live in the stockpy_spark/registry/ package, one module
+per domain; this module is a thin adapter.
 """
 
 from __future__ import annotations

@@ -14,6 +14,8 @@ with executors. Each has an exact ANSI-SQL twin used as the DuckDB oracle
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -42,6 +44,25 @@ def tokenize(col: Column | str) -> Column:
     return F.when(
         c.isNull() | (F.trim(c) == ""), F.array().cast("array<string>")
     ).otherwise(F.split(F.trim(c), r"\s+"))
+
+
+# Java-regex \s is ASCII-only; Python's \s and str.split() also match
+# Unicode whitespace (NBSP, thin space, \x1c-\x1f) and would tokenize
+# web text differently.
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def tokenize_lower_row(text: object) -> list[str]:
+    """Python twin of ``tokenize(lower(col))`` for one row, for kernels
+    that tokenize inside ``mapInPandas``. It mirrors the column function
+    exactly: Spark's trim strips ONLY the ASCII space, the split is on
+    ASCII whitespace runs, so a leading/trailing tab yields an empty edge
+    token as Spark's split does; NULL and all-space text give no tokens."""
+    if not isinstance(text, str):
+        return []
+    if text.strip(" ") == "":
+        return []
+    return _JAVA_WS.split(text.lower().strip(" "))
 
 
 def token_count(col: Column | str) -> Column:

@@ -19,7 +19,7 @@ chunk yields exactly one).
 
 Reference parity: none (the reference has no text pipeline ops);
 extension surface per the LLM-pipeline brief. Exact SQL oracle:
-registry_r6.py reproduces the grid with generate_series + list_slice
+registry/text.py reproduces the grid with generate_series + list_slice
 in DuckDB.
 """
 

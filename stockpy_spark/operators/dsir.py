@@ -37,6 +37,7 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from stockpy_spark.functions.text import tokenize_lower_row
 from stockpy_spark.operators.pinning import pin_lazy, pin_literal_with_rows
 from stockpy_spark.operators.privacy import _hash_uniform
 
@@ -64,30 +65,20 @@ def _bucket(gram: Column, n_buckets: int, salt: str) -> Column:
     )
 
 
-def _kernel_tokens_and_buckets(salt: str, n_buckets: int):
-    """Python-side tokenize + bucket for :func:`dsir_bucket_doc_counts`
-    — bit-identical to word_ngrams plus :func:`_bucket`: tokenization
-    mirrors functions.text.tokenize's Java semantics (space-only trim, ASCII
-    \\s split — see bigram_stats_kernel), bucketing mirrors
-    :func:`_bucket` (md5 over UTF-8 "salt\\x1fgram", first 13 hex
-    chars = 52 bits, mod n_buckets)."""
-    import re
+def _kernel_bucket(salt: str, n_buckets: int):
+    """Python-side :func:`_bucket` for :func:`dsir_bucket_doc_counts`
+    (md5 over UTF-8 "salt\\x1fgram", first 13 hex chars = 52 bits, mod
+    n_buckets); its tokens come from
+    :func:`~stockpy_spark.functions.text.tokenize_lower_row`, so the
+    pair is bit-identical to word_ngrams plus :func:`_bucket`."""
     from hashlib import md5
 
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
     pre = (salt + "\x1f").encode("utf-8")
-
-    def tokens(text):
-        if not isinstance(text, str):
-            return []
-        if text.strip(" ") == "":
-            return []
-        return ws.split(text.lower().strip(" "))
 
     def bucket(gram: str) -> int:
         return int(md5(pre + gram.encode("utf-8")).hexdigest()[:13], 16) % n_buckets
 
-    return tokens, bucket
+    return bucket
 
 
 def dsir_bucket_doc_counts(
@@ -130,12 +121,12 @@ def dsir_bucket_doc_counts(
 
         import pandas as pd
 
-        tokens, bucket = _kernel_tokens_and_buckets(salt, n_buckets)
+        bucket = _kernel_bucket(salt, n_buckets)
         for pdf in batches:
             id_o, t_o, b_o, c_o = [], [], [], []
             for did, tgt, text in zip(pdf["__id"], pdf["__tgt"], pdf["__txt"]):
                 t = bool(tgt)
-                toks = tokens(text)
+                toks = tokenize_lower_row(text)
                 if len(toks) < 2:
                     id_o.append(did)
                     t_o.append(t)

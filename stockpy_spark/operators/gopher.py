@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from stockpy_spark.functions.text import tokenize_lower_row
+
 
 # The 8 words Gopher's "required stopwords" rule checks for (Rae et al.
 # 2021, App. A: a document must contain at least 2 of these).
@@ -261,28 +263,12 @@ def gopher_repetition_profile(
     all_ns = sorted(set(top_ns) | set(dup_ns))
 
     def gen(batches):
-        import re
         from collections import Counter
         from decimal import ROUND_HALF_UP, Decimal
 
         import pandas as pd
 
         quantum = Decimal(1).scaleb(-dp)
-        # Java-regex \s is ASCII-only ([ \t\n\x0b\f\r]) and Spark's
-        # trim strips ONLY ASCII space (0x20) — Python's .strip()/
-        # .split() are Unicode-whitespace (NBSP, thin space, \x1c-\x1f
-        # as separators) and would tokenize web text differently.
-        # After a space-only trim, leading/trailing \t etc. produce
-        # empty edge tokens, as Spark's split(trim(lower(text)), '\s+')
-        # does under its limit=-1.
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")
-
-        def tokens(text):
-            if not isinstance(text, str):
-                return []
-            if text.strip(" ") == "":
-                return []  # an all-space or empty doc has no tokens
-            return ws.split(text.lower().strip(" "))
 
         def rnd(x: float) -> float:
             # Spark round() goes through BigDecimal.valueOf(double) =
@@ -309,7 +295,7 @@ def gopher_repetition_profile(
         for pdf in batches:
             out = []
             for did, text in zip(pdf[id_col], pdf[text_col]):
-                toks = tokens(text)
+                toks = tokenize_lower_row(text)
                 nt = len(toks)
                 lens = [len(t) for t in toks]
                 tot = sum(lens)

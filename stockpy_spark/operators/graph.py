@@ -27,7 +27,7 @@ never leave the cluster.
 
 Reference parity: none (the reference has no graph ops); extension
 surface per the LLM-pipeline brief. Oracle: DuckDB WITH RECURSIVE
-reachability (registry_graph.py) — exact transitive closure, so a hash
+reachability (registry/dedup.py) — exact transitive closure, so a hash
 match proves the fixpoint is the true component assignment, not an
 early-stopped approximation.
 """

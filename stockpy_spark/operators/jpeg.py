@@ -22,7 +22,7 @@ Unsupported (loudly rejected): progressive (SOF2), arithmetic coding,
 
 JPEG is lossy, so unlike BMP/PNG/GIF there is no bit-exact closed-form
 pixel oracle. The cross-engine gate instead checks the QUALITY
-CONTRACT (registry_r6 gate_jpeg_fidelity): Spark decodes the real
+CONTRACT (registry/multimodal.py gate_jpeg_fidelity): Spark decodes the real
 JPEG payload and compares against the closed-form source pixels; the
 max absolute channel error must sit within the bound implied by the
 quantization tables. The roundtrip itself is pytest-covered at

@@ -13,7 +13,7 @@ this stays JVM-side with zero UDFs.
 
 Correctness gating: sketch binaries are engine-specific, so the raw
 sketches have no cross-engine oracle. Like the ANN/LSH families
-(registry_ext gate queries), the QUALITY CONTRACT is hash-checked
+(registry/similarity.py gate queries), the QUALITY CONTRACT is hash-checked
 instead: the rollup emits the coarse estimate alongside the exact
 distinct count and a gate column that is 1 iff the relative error
 clears the floor; the DuckDB oracle states the expected gate rows by

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from stockpy_spark.functions.text import tokenize
+from stockpy_spark.functions.text import tokenize, tokenize_lower_row
 from stockpy_spark.operators.pinning import pin, pin_literal_with_rows
 
 
@@ -186,24 +186,14 @@ def bigram_stats_kernel(
     )
 
     def gen(batches):
-        import re
         from collections import Counter
 
         import pandas as pd
 
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")
-
-        def tokens(text):
-            if not isinstance(text, str):
-                return []
-            if text.strip(" ") == "":
-                return []  # tokenize's trim(col)=='' empty-array branch
-            return ws.split(text.lower().strip(" "))
-
         for pdf in batches:
             doc_o, bg_o, m_o, ug_o = [], [], [], []
             for did, text in zip(pdf[id_col], pdf[text_col]):
-                toks = tokens(text)
+                toks = tokenize_lower_row(text)
                 if len(toks) >= 2:
                     for g, c in Counter(
                         map(" ".join, zip(toks, toks[1:]))
@@ -261,19 +251,9 @@ def bigram_count_partials(
     )
 
     def gen(batches):
-        import re
         from collections import Counter
 
         import pandas as pd
-
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")
-
-        def tokens(text):
-            if not isinstance(text, str):
-                return []
-            if text.strip(" ") == "":
-                return []
-            return ws.split(text.lower().strip(" "))
 
         bg_c: Counter = Counter()
         ug_c: Counter = Counter()
@@ -289,7 +269,7 @@ def bigram_count_partials(
 
         for pdf in batches:
             for text in pdf[text_col]:
-                toks = tokens(text)
+                toks = tokenize_lower_row(text)
                 if len(toks) >= 2:
                     bg_c.update(map(" ".join, zip(toks, toks[1:])))
                 if emit_unigrams and toks:

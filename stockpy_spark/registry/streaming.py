@@ -1,26 +1,22 @@
 """Streaming queries under the DuckDB oracle gate.
 
-The streaming surface (streaming/ops.py) was pytest-only through round
-5 — the one family without a driver hash row. These queries close that
-gap: each one builds a FINITE file-source stream over the driver's
-events table, drives a real `writeStream` (micro-batch engine, state
+Each query builds a FINITE file-source stream over the
+testdata, drives a real ``writeStream`` (micro-batch engine, state
 store, checkpoint) to completion with availableNow, materializes the
-sink, and returns the final sink state as a plain DataFrame the driver
-hashes against a DuckDB oracle computing the same windows from the raw
-events.
+sink, and returns the final sink state as a plain DataFrame the oracle
+gate hashes against DuckDB SQL computing the same result from the raw
+tables.
 
-Sink strategy — update-mode upsert log, resolved last-write-wins
-(streaming/ops.py run_update_upsert_log_to_parquet): exact under any
-micro-batch split. Append mode would *withhold* the trailing windows on
-a finite stream (the watermark never passes their end — the round-5
-batch-parity pytest documents this), so an append-mode gate would be
-wrong by construction; the upsert log is also the shape a production
-pipeline feeds a key-value serving store with. The generous watermark
-keeps every row on-time for the verification run; a production deploy
-sets it to the real lateness bound to get state eviction.
+Sink strategy: an update-mode upsert log, resolved last-write-wins
+(streaming/ops.py run_update_upsert_log_to_parquet), exact under any
+micro-batch split. Append mode would *withhold* the trailing windows
+on a finite stream (the watermark never passes their end), so an
+append-mode gate would be wrong by construction. The generous
+watermark keeps every row on-time for the verification run; a
+production deploy sets it to the real lateness bound.
 
-Reference parity: none (the reference is batch-only Glue jobs); this is
-the Structured-Streaming extension surface of SURVEY.md §2.9.
+Every query here writes a private work directory and sets streaming
+session state, so each is declared ``serial=True``.
 """
 
 from __future__ import annotations
@@ -31,8 +27,12 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stockpy_spark.registry_ext import SQL_CM_SKETCH as SQL_STREAM_CM
-from stockpy_spark.registry_ext import SQL_MM_PIXELS as SQL_STREAM_BLOB
+from stockpy_spark.registry._common import (
+    SQL_CM_SKETCH,
+    SQL_MM_PIXELS,
+    _bsig_ctes,
+    query,
+)
 from stockpy_spark.sources.testdata import read_events
 from stockpy_spark.streaming.ops import (
     dedup_within_watermark,
@@ -114,14 +114,6 @@ def _run_windowed(
     )
 
 
-def q_stream_hourly_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour windowed count/sum per event_type, computed by
-    the streaming engine end-to-end (readStream -> withWatermark ->
-    window groupBy -> writeStream foreachBatch -> parquet) and resolved
-    to final sink state. Hash-equal to the batch hourly rollup."""
-    return _run_windowed(spark, sf_dir, "1 hour", None)
-
-
 SQL_STREAM_HOURLY = """
 SELECT CAST(floor(epoch(ts) / 3600) * 3600 AS BIGINT) AS bucket_start,
        event_type,
@@ -132,11 +124,13 @@ GROUP BY 1, 2
 """
 
 
-def q_stream_hopping_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding (2-hour window, 1-hour hop) streaming aggregate — every
-    event lands in two windows, the streaming twin of the batch
-    hopping_window_rollup's explode fan-out. Same upsert-log sink."""
-    return _run_windowed(spark, sf_dir, "2 hours", "1 hour")
+@query("stream_hourly_agg", oracle=SQL_STREAM_HOURLY, serial=True)
+def q_stream_hourly_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tumbling 1-hour windowed count/sum per event_type, computed by
+    the streaming engine end-to-end (readStream -> withWatermark ->
+    window groupBy -> writeStream foreachBatch -> parquet) and resolved
+    to final sink state. Hash-equal to the batch hourly rollup."""
+    return _run_windowed(spark, sf_dir, "1 hour", None)
 
 
 SQL_STREAM_HOPPING = """
@@ -157,6 +151,25 @@ GROUP BY 1, 2
 """
 
 
+@query("stream_hopping_agg", oracle=SQL_STREAM_HOPPING, serial=True)
+def q_stream_hopping_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sliding (2-hour window, 1-hour hop) streaming aggregate — every
+    event lands in two windows, the streaming twin of the batch
+    hopping_window_rollup's explode fan-out. Same upsert-log sink."""
+    return _run_windowed(spark, sf_dir, "2 hours", "1 hour")
+
+
+SQL_STREAM_DEDUP = """
+SELECT user_id,
+       COUNT(DISTINCT event_type) AS n_types,
+       array_to_string(list_sort(list(DISTINCT event_type)), ',') AS types
+FROM events
+WHERE user_id IS NOT NULL AND event_type IS NOT NULL AND ts IS NOT NULL
+GROUP BY user_id
+"""
+
+
+@query("stream_dedup_keys", oracle=SQL_STREAM_DEDUP, serial=True)
 def q_stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming stateful dedup end-to-end: readStream ->
     withWatermark -> dropDuplicates on (user_id, event_type) -> append
@@ -197,16 +210,17 @@ def q_stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_STREAM_DEDUP = """
-SELECT user_id,
-       COUNT(DISTINCT event_type) AS n_types,
-       array_to_string(list_sort(list(DISTINCT event_type)), ',') AS types
+SQL_STREAM_ENRICH = """
+SELECT CAST(floor(epoch(ts) / 86400) * 86400 AS BIGINT) AS bucket_start,
+       CAST(length(event_type) % 3 AS INTEGER) AS tier,
+       COUNT(*) AS n_events,
+       ROUND(SUM(value), 4) AS sum_value
 FROM events
-WHERE user_id IS NOT NULL AND event_type IS NOT NULL AND ts IS NOT NULL
-GROUP BY user_id
+GROUP BY 1, 2
 """
 
 
+@query("stream_static_enrich", oracle=SQL_STREAM_ENRICH, serial=True)
 def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static join end-to-end: the streaming events enrich
     against a STATIC dimension (re-read fresh per micro-batch by the
@@ -252,16 +266,18 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_STREAM_ENRICH = """
-SELECT CAST(floor(epoch(ts) / 86400) * 86400 AS BIGINT) AS bucket_start,
-       CAST(length(event_type) % 3 AS INTEGER) AS tier,
+SQL_STREAM_STATS = """
+SELECT user_id,
        COUNT(*) AS n_events,
-       ROUND(SUM(value), 4) AS sum_value
+       ROUND(SUM(value), 4) AS sum_value,
+       ROUND(MAX(value), 4) AS max_value
 FROM events
-GROUP BY 1, 2
+WHERE user_id IS NOT NULL AND value IS NOT NULL AND ts IS NOT NULL
+GROUP BY user_id
 """
 
 
+@query("stream_running_stats", oracle=SQL_STREAM_STATS, serial=True)
 def q_stream_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful operator (applyInPandasWithState) end-to-end:
     per-user running (count, sum, max) maintained in explicit state
@@ -310,17 +326,22 @@ def q_stream_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_STREAM_STATS = """
-SELECT user_id,
-       COUNT(*) AS n_events,
-       ROUND(SUM(value), 4) AS sum_value,
-       ROUND(MAX(value), 4) AS max_value
-FROM events
-WHERE user_id IS NOT NULL AND value IS NOT NULL AND ts IS NOT NULL
-GROUP BY user_id
+SQL_STREAM_JOIN = """
+WITH v AS (
+    SELECT user_id, ts AS v_ts FROM events WHERE event_type = 'view'
+), p AS (
+    SELECT user_id, ts AS p_ts FROM events WHERE event_type = 'purchase'
+)
+SELECT v.user_id, COUNT(*) AS n_pairs,
+       CAST(SUM(epoch_us(p_ts) - epoch_us(v_ts)) AS BIGINT) AS sum_delta_us
+FROM v JOIN p ON v.user_id = p.user_id
+   AND p.p_ts >= v.v_ts - INTERVAL 1 HOUR
+   AND p.p_ts <= v.v_ts + INTERVAL 1 HOUR
+GROUP BY 1
 """
 
 
+@query("stream_join_attribution", oracle=SQL_STREAM_JOIN, serial=True)
 def q_stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream inner join end-to-end — the sixth (and last)
     streaming operator class under the hash gate: the view stream
@@ -374,21 +395,6 @@ def q_stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_STREAM_JOIN = """
-WITH v AS (
-    SELECT user_id, ts AS v_ts FROM events WHERE event_type = 'view'
-), p AS (
-    SELECT user_id, ts AS p_ts FROM events WHERE event_type = 'purchase'
-)
-SELECT v.user_id, COUNT(*) AS n_pairs,
-       CAST(SUM(epoch_us(p_ts) - epoch_us(v_ts)) AS BIGINT) AS sum_delta_us
-FROM v JOIN p ON v.user_id = p.user_id
-   AND p.p_ts >= v.v_ts - INTERVAL 1 HOUR
-   AND p.p_ts <= v.v_ts + INTERVAL 1 HOUR
-GROUP BY 1
-"""
-
-
 def q_stream_tws_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user running stats via ``transformWithStateInPandas`` — the
     Spark-4 arbitrary-state API (named ValueState primitives, timers,
@@ -397,7 +403,7 @@ def q_stream_tws_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState — the two queries pin the migration pair
     against the SAME batch oracle).
 
-    NOT REGISTERED in STREAM_QUERIES: the API's state protocol needs
+    NOT declared with @query: the API's state protocol needs
     the ``protobuf`` package, absent from this container (the
     driver-side worker dies with "cannot import google.protobuf" —
     environment seam, not code; tests/test_streaming gate on the
@@ -456,6 +462,19 @@ def q_stream_tws_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+SQL_STREAM_CDC = """
+SELECT user_id,
+       CAST(epoch_us(ts) AS BIGINT) AS last_epoch_us,
+       event_id AS last_event_id,
+       round(value, 4) AS last_value
+FROM events
+WHERE user_id IS NOT NULL AND ts IS NOT NULL AND event_id IS NOT NULL
+QUALIFY row_number() OVER (PARTITION BY user_id
+                           ORDER BY ts DESC, event_id DESC) = 1
+"""
+
+
+@query("stream_cdc_upsert", oracle=SQL_STREAM_CDC, serial=True)
 def q_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC-apply end-to-end: the event stream merges into a
     materialized current-state parquet table per micro-batch
@@ -489,18 +508,27 @@ def q_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_STREAM_CDC = """
-SELECT user_id,
-       CAST(epoch_us(ts) AS BIGINT) AS last_epoch_us,
-       event_id AS last_event_id,
-       round(value, 4) AS last_value
-FROM events
-WHERE user_id IS NOT NULL AND ts IS NOT NULL AND event_id IS NOT NULL
-QUALIFY row_number() OVER (PARTITION BY user_id
-                           ORDER BY ts DESC, event_id DESC) = 1
+SQL_STREAM_LATE = """
+WITH b AS (
+    SELECT CAST(floor(epoch(ts)) AS BIGINT) AS e, event_type
+    FROM events WHERE ts IS NOT NULL
+), mx AS (SELECT max(e) AS m FROM b),
+ontime AS (SELECT e, event_type FROM b, mx WHERE e >= m - 864000),
+late AS (SELECT e, event_type FROM b, mx WHERE e < m - 864000)
+SELECT CAST((SELECT count(*) FROM ontime)
+            + (SELECT count(*) FROM late) AS BIGINT) AS n_input,
+       CAST((SELECT count(*) FROM ontime) AS BIGINT) AS n_on_time,
+       CAST((SELECT count(*) FROM late) AS BIGINT) AS n_late_rows,
+       CAST((SELECT count(*) FROM (
+            SELECT DISTINCT e // 3600, event_type FROM late
+       )) AS BIGINT) AS n_dropped_groups,
+       CAST((SELECT count(*) FROM (
+            SELECT DISTINCT e // 3600, event_type FROM ontime
+       )) AS BIGINT) AS n_windows
 """
 
 
+@query("stream_late_accounting", oracle=SQL_STREAM_LATE, serial=True)
 def q_stream_late_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked late-data accounting — the eighth streaming class:
     replay the events table as THREE ordered arrival waves (last 7
@@ -533,27 +561,7 @@ def q_stream_late_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_STREAM_LATE = """
-WITH b AS (
-    SELECT CAST(floor(epoch(ts)) AS BIGINT) AS e, event_type
-    FROM events WHERE ts IS NOT NULL
-), mx AS (SELECT max(e) AS m FROM b),
-ontime AS (SELECT e, event_type FROM b, mx WHERE e >= m - 864000),
-late AS (SELECT e, event_type FROM b, mx WHERE e < m - 864000)
-SELECT CAST((SELECT count(*) FROM ontime)
-            + (SELECT count(*) FROM late) AS BIGINT) AS n_input,
-       CAST((SELECT count(*) FROM ontime) AS BIGINT) AS n_on_time,
-       CAST((SELECT count(*) FROM late) AS BIGINT) AS n_late_rows,
-       CAST((SELECT count(*) FROM (
-            SELECT DISTINCT e // 3600, event_type FROM late
-       )) AS BIGINT) AS n_dropped_groups,
-       CAST((SELECT count(*) FROM (
-            SELECT DISTINCT e // 3600, event_type FROM ontime
-       )) AS BIGINT) AS n_windows
-"""
-
-
-
+@query("stream_cm_merge", oracle=SQL_CM_SKETCH, serial=True)
 def q_stream_cm_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Count-Min accumulation (streaming/ops.py
     run_cm_grid_accumulate — the 9th streaming class): the events
@@ -597,7 +605,7 @@ def q_stream_cm_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cm_point_estimates(grid, e, "user_id", depth=4, width=64)
 
 
-
+@query("stream_blob_ingest", oracle=SQL_MM_PIXELS, serial=True)
 def q_stream_blob_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous blob-shard ingestion (streaming/ops.py
     run_blob_shard_ingest — the 10th streaming class): per-doc BMP
@@ -655,6 +663,72 @@ def q_stream_blob_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_pixel_features(restored)
 
 
+def _admit_wave_sql(w: int, fps_src: str, keys_src: str) -> str:
+    """One sequential admission wave: exact anti vs the standing
+    fingerprints, band semi vs the standing keys, within-batch
+    bucket-min — the incremental_dedup_admit stages over wave w."""
+    return f"""batch_{w} AS (
+    SELECT * FROM documents
+    WHERE doc_id % 5 = 0 AND text IS NOT NULL AND (doc_id // 5) % 3 = {w}
+), s1_{w} AS (
+    SELECT b.* FROM batch_{w} b
+    WHERE md5(b.text) NOT IN (SELECT f FROM {fps_src})
+      AND b.doc_id = (SELECT min(b2.doc_id) FROM batch_{w} b2
+                      WHERE md5(b2.text) = md5(b.text))
+), {_bsig_ctes(f'_b{w}', f's1_{w}')}, s2_{w} AS (
+    SELECT s1_{w}.* FROM s1_{w}
+    WHERE NOT EXISTS (
+        SELECT 1 FROM bsig_b{w} bb
+        JOIN {keys_src} ck ON bb.band = ck.band AND bb.bs = ck.bs
+        WHERE bb.doc = s1_{w}.doc_id)
+), bs2_{w} AS (
+    SELECT bb.* FROM bsig_b{w} bb JOIN s2_{w} ON bb.doc = s2_{w}.doc_id
+), bucket_min_{w} AS (
+    SELECT band, bs, min(doc) AS bmin FROM bs2_{w} GROUP BY band, bs
+), keeper_{w} AS (
+    SELECT bs2_{w}.doc, min(bm.bmin) AS k
+    FROM bs2_{w} JOIN bucket_min_{w} bm
+      ON bs2_{w}.band = bm.band AND bs2_{w}.bs = bm.bs
+    GROUP BY bs2_{w}.doc
+), adm_{w} AS (
+    SELECT s2_{w}.* FROM s2_{w}
+    LEFT JOIN keeper_{w} ON keeper_{w}.doc = s2_{w}.doc_id
+    WHERE keeper_{w}.k IS NULL OR keeper_{w}.k = s2_{w}.doc_id
+), fps_{w + 1} AS (
+    SELECT f FROM {fps_src}
+    UNION SELECT md5(text) AS f FROM adm_{w}
+), keys_{w + 1} AS (
+    SELECT band, bs FROM {keys_src}
+    UNION SELECT DISTINCT bb.band, bb.bs
+          FROM bsig_b{w} bb JOIN adm_{w} ON bb.doc = adm_{w}.doc_id
+)"""
+
+
+def _sql_stream_admit() -> str:
+    sql = f"""
+WITH corpus AS (
+    SELECT * FROM documents WHERE doc_id % 5 <> 0 AND text IS NOT NULL
+), {_bsig_ctes('_c', 'corpus')}, fps_0 AS (
+    SELECT DISTINCT md5(text) AS f FROM corpus
+), keys_0 AS (
+    SELECT DISTINCT band, bs FROM bsig_c
+), {_admit_wave_sql(0, 'fps_0', 'keys_0')},
+{_admit_wave_sql(1, 'fps_1', 'keys_1')},
+{_admit_wave_sql(2, 'fps_2', 'keys_2')}
+SELECT doc_id, lang, n_chars FROM adm_0
+UNION ALL SELECT doc_id, lang, n_chars FROM adm_1
+UNION ALL SELECT doc_id, lang, n_chars FROM adm_2
+"""
+    # chained sequential stages re-evaluate ancestors exponentially if
+    # DuckDB inlines them (the kcenter-oracle lesson) — materialize
+    # every CTE
+    return sql.replace(" AS (", " AS MATERIALIZED (")
+
+
+SQL_STREAM_ADMIT = _sql_stream_admit()
+
+
+@query("stream_minhash_admit", oracle=SQL_STREAM_ADMIT, serial=True)
 def q_stream_minhash_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming/incremental MinHash-LSH admitter (streaming/ops.py
     run_incremental_minhash_admitter — the 11th streaming class): the
@@ -712,139 +786,6 @@ def q_stream_minhash_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return admitted.select("doc_id", "lang", "n_chars")
 
 
-def _admit_wave_sql(w: int, fps_src: str, keys_src: str) -> str:
-    """One sequential admission wave: exact anti vs the standing
-    fingerprints, band semi vs the standing keys, within-batch
-    bucket-min — the incremental_dedup_admit stages over wave w."""
-    from stockpy_spark.registry_r6 import _bsig_ctes
-
-    return f"""batch_{w} AS (
-    SELECT * FROM documents
-    WHERE doc_id % 5 = 0 AND text IS NOT NULL AND (doc_id // 5) % 3 = {w}
-), s1_{w} AS (
-    SELECT b.* FROM batch_{w} b
-    WHERE md5(b.text) NOT IN (SELECT f FROM {fps_src})
-      AND b.doc_id = (SELECT min(b2.doc_id) FROM batch_{w} b2
-                      WHERE md5(b2.text) = md5(b.text))
-), {_bsig_ctes(f'_b{w}', f's1_{w}')}, s2_{w} AS (
-    SELECT s1_{w}.* FROM s1_{w}
-    WHERE NOT EXISTS (
-        SELECT 1 FROM bsig_b{w} bb
-        JOIN {keys_src} ck ON bb.band = ck.band AND bb.bs = ck.bs
-        WHERE bb.doc = s1_{w}.doc_id)
-), bs2_{w} AS (
-    SELECT bb.* FROM bsig_b{w} bb JOIN s2_{w} ON bb.doc = s2_{w}.doc_id
-), bucket_min_{w} AS (
-    SELECT band, bs, min(doc) AS bmin FROM bs2_{w} GROUP BY band, bs
-), keeper_{w} AS (
-    SELECT bs2_{w}.doc, min(bm.bmin) AS k
-    FROM bs2_{w} JOIN bucket_min_{w} bm
-      ON bs2_{w}.band = bm.band AND bs2_{w}.bs = bm.bs
-    GROUP BY bs2_{w}.doc
-), adm_{w} AS (
-    SELECT s2_{w}.* FROM s2_{w}
-    LEFT JOIN keeper_{w} ON keeper_{w}.doc = s2_{w}.doc_id
-    WHERE keeper_{w}.k IS NULL OR keeper_{w}.k = s2_{w}.doc_id
-), fps_{w + 1} AS (
-    SELECT f FROM {fps_src}
-    UNION SELECT md5(text) AS f FROM adm_{w}
-), keys_{w + 1} AS (
-    SELECT band, bs FROM {keys_src}
-    UNION SELECT DISTINCT bb.band, bb.bs
-          FROM bsig_b{w} bb JOIN adm_{w} ON bb.doc = adm_{w}.doc_id
-)"""
-
-
-def _sql_stream_admit() -> str:
-    from stockpy_spark.registry_r6 import _bsig_ctes
-
-    sql = f"""
-WITH corpus AS (
-    SELECT * FROM documents WHERE doc_id % 5 <> 0 AND text IS NOT NULL
-), {_bsig_ctes('_c', 'corpus')}, fps_0 AS (
-    SELECT DISTINCT md5(text) AS f FROM corpus
-), keys_0 AS (
-    SELECT DISTINCT band, bs FROM bsig_c
-), {_admit_wave_sql(0, 'fps_0', 'keys_0')},
-{_admit_wave_sql(1, 'fps_1', 'keys_1')},
-{_admit_wave_sql(2, 'fps_2', 'keys_2')}
-SELECT doc_id, lang, n_chars FROM adm_0
-UNION ALL SELECT doc_id, lang, n_chars FROM adm_1
-UNION ALL SELECT doc_id, lang, n_chars FROM adm_2
-"""
-    # chained sequential stages re-evaluate ancestors exponentially if
-    # DuckDB inlines them (the kcenter-oracle lesson) — materialize
-    # every CTE
-    return sql.replace(" AS (", " AS MATERIALIZED (")
-
-
-SQL_STREAM_ADMIT = _sql_stream_admit()
-
-
-STREAM_QUERIES = {
-    "stream_hourly_agg": (q_stream_hourly_agg, SQL_STREAM_HOURLY),
-    "stream_hopping_agg": (q_stream_hopping_agg, SQL_STREAM_HOPPING),
-    "stream_dedup_keys": (q_stream_dedup_keys, SQL_STREAM_DEDUP),
-    "stream_static_enrich": (q_stream_static_enrich, SQL_STREAM_ENRICH),
-    "stream_running_stats": (q_stream_running_stats, SQL_STREAM_STATS),
-    "stream_join_attribution": (q_stream_join_attribution, SQL_STREAM_JOIN),
-    "stream_cm_merge": (q_stream_cm_merge, SQL_STREAM_CM),
-    "stream_blob_ingest": (q_stream_blob_ingest, SQL_STREAM_BLOB),
-    "stream_cdc_upsert": (q_stream_cdc_upsert, SQL_STREAM_CDC),
-    "stream_late_accounting": (q_stream_late_accounting, SQL_STREAM_LATE),
-    "stream_minhash_admit": (q_stream_minhash_admit, SQL_STREAM_ADMIT),
-}
-
-
-def q_stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming PSI drift monitor (streaming/ops.py run_psi_monitor —
-    the 12th streaming class): the EARLIEST epoch week of events is
-    the static reference; the remaining events arrive as THREE
-    deterministic waves (event_id % 3, synthetic mtimes pin the
-    file-source order), and every micro-batch appends one audit row
-    scored against the reference. Batches are independent against the
-    static reference, so the oracle is a per-wave PSI grouped by
-    event_id % 3 — the batch SPLIT (not order) is what the fixture
-    pins."""
-    import atexit
-    import glob as _glob
-    import shutil
-
-    from stockpy_spark.streaming.ops import run_psi_monitor
-
-    ev = read_events(spark, sf_dir).where(
-        F.col("value").isNotNull() & F.col("ts").isNotNull()
-    )
-    wk = F.floor(F.col("ts").cast("timestamp").cast("long") / 604800)
-    refp = ev.agg(F.min(wk).alias("rp")).collect()[0].rp
-    ref = ev.where(wk == F.lit(refp))
-    rest = ev.where(wk != F.lit(refp)).select("event_id", "value")
-    work = tempfile.mkdtemp(prefix="stockpy_stream_psi_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    landing = os.path.join(work, "landing")
-    os.makedirs(landing)
-    for w in range(3):
-        tmp = os.path.join(work, f"w{w}")
-        rest.where(F.col("event_id") % 3 == w).coalesce(1).write.parquet(tmp)
-        part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dst = os.path.join(landing, f"batch-{w}.parquet")
-        shutil.move(part, dst)
-        os.utime(dst, (1_000_000_000 + w, 1_000_000_000 + w))
-    stream = (
-        spark.readStream.schema(rest.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-    return run_psi_monitor(
-        spark,
-        stream,
-        ref,
-        "value",
-        os.path.join(work, "sink"),
-        os.path.join(work, "ckpt"),
-    )
-
-
 SQL_STREAM_PSI = """
 WITH base AS (
     SELECT CAST(event_id AS BIGINT) AS eid, value AS v,
@@ -900,9 +841,74 @@ FROM terms GROUP BY batch_id
 """
 
 
-STREAM_QUERIES["stream_psi_monitor"] = (q_stream_psi_monitor, SQL_STREAM_PSI)
+@query("stream_psi_monitor", oracle=SQL_STREAM_PSI, serial=True)
+def q_stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming PSI drift monitor (streaming/ops.py run_psi_monitor —
+    the 12th streaming class): the EARLIEST epoch week of events is
+    the static reference; the remaining events arrive as THREE
+    deterministic waves (event_id % 3, synthetic mtimes pin the
+    file-source order), and every micro-batch appends one audit row
+    scored against the reference. Batches are independent against the
+    static reference, so the oracle is a per-wave PSI grouped by
+    event_id % 3 — the batch SPLIT (not order) is what the fixture
+    pins."""
+    import atexit
+    import glob as _glob
+    import shutil
+
+    from stockpy_spark.streaming.ops import run_psi_monitor
+
+    ev = read_events(spark, sf_dir).where(
+        F.col("value").isNotNull() & F.col("ts").isNotNull()
+    )
+    wk = F.floor(F.col("ts").cast("timestamp").cast("long") / 604800)
+    refp = ev.agg(F.min(wk).alias("rp")).collect()[0].rp
+    ref = ev.where(wk == F.lit(refp))
+    rest = ev.where(wk != F.lit(refp)).select("event_id", "value")
+    work = tempfile.mkdtemp(prefix="stockpy_stream_psi_")
+    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    landing = os.path.join(work, "landing")
+    os.makedirs(landing)
+    for w in range(3):
+        tmp = os.path.join(work, f"w{w}")
+        rest.where(F.col("event_id") % 3 == w).coalesce(1).write.parquet(tmp)
+        part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+        dst = os.path.join(landing, f"batch-{w}.parquet")
+        shutil.move(part, dst)
+        os.utime(dst, (1_000_000_000 + w, 1_000_000_000 + w))
+    stream = (
+        spark.readStream.schema(rest.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(landing)
+    )
+    return run_psi_monitor(
+        spark,
+        stream,
+        ref,
+        "value",
+        os.path.join(work, "sink"),
+        os.path.join(work, "ckpt"),
+    )
 
 
+SQL_STREAM_SHARDPOS = """
+WITH w AS (
+    SELECT doc_id, (doc_id // 5) % 3 AS wave,
+           md5('shard' || chr(31) || CAST(doc_id AS VARCHAR)) AS draw,
+           CAST(CAST(concat('0x', substr(md5('shard' || chr(31)
+                || CAST(doc_id AS VARCHAR)), 1, 13)) AS BIGINT) % 4
+                AS INTEGER) AS shard
+    FROM documents WHERE doc_id % 5 = 0
+)
+SELECT doc_id, shard,
+       CAST(row_number() OVER (
+           PARTITION BY shard ORDER BY wave, draw, doc_id
+       ) AS BIGINT) AS position
+FROM w
+"""
+
+
+@query("stream_shard_positions", oracle=SQL_STREAM_SHARDPOS, serial=True)
 def q_stream_shard_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous training-order assignment (streaming/ops.py
     run_incremental_shard_positions — the 13th streaming class, the
@@ -948,24 +954,3 @@ def q_stream_shard_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(work, "state"),
         os.path.join(work, "ckpt"),
     )
-
-
-SQL_STREAM_SHARDPOS = """
-WITH w AS (
-    SELECT doc_id, (doc_id // 5) % 3 AS wave,
-           md5('shard' || chr(31) || CAST(doc_id AS VARCHAR)) AS draw,
-           CAST(CAST(concat('0x', substr(md5('shard' || chr(31)
-                || CAST(doc_id AS VARCHAR)), 1, 13)) AS BIGINT) % 4
-                AS INTEGER) AS shard
-    FROM documents WHERE doc_id % 5 = 0
-)
-SELECT doc_id, shard,
-       CAST(row_number() OVER (
-           PARTITION BY shard ORDER BY wave, draw, doc_id
-       ) AS BIGINT) AS position
-FROM w
-"""
-
-STREAM_QUERIES["stream_shard_positions"] = (
-    q_stream_shard_positions, SQL_STREAM_SHARDPOS,
-)

@@ -40,22 +40,17 @@ def test_all_queries_run_sf0001(spark, sf_dir):
     queries that write shared fixtures or mutate session conf — the
     hive warehouse cycle, the streaming sinks/state queries, and the
     fmt_* format-fixture round-trips — keep running serially AFTER
-    the pool so their rmtree/DROP TABLE/conf.set cannot race.
+    the pool so their rmtree/DROP TABLE/conf.set cannot race. Those
+    queries declare it themselves (``@query(..., serial=True)``).
     Coverage and assertions are unchanged; a pooled failure
     propagates with its query name via pool.map."""
     from concurrent.futures import ThreadPoolExecutor
 
-    serial_names = {"fmt_csv_events", "fmt_json_events",
-                    "fmt_orc_events", "fmt_xml_events"}
-    serial_modules = ("registry_hive", "registry_stream")
-
-    def is_serial(name, fn):
-        mod = getattr(fn, "__module__", "") or ""
-        return name in serial_names or mod.endswith(serial_modules)
+    from stockpy_spark.registry import SERIAL
 
     items = list(entry_mod.queries().items())
-    pooled = [it for it in items if not is_serial(*it)]
-    serial = [it for it in items if is_serial(*it)]
+    pooled = [it for it in items if it[0] not in SERIAL]
+    serial = [it for it in items if it[0] in SERIAL]
 
     def run(item):
         name, fn = item

@@ -100,6 +100,57 @@ def test_star_edges_give_same_components_as_all_pairs(spark):
     assert any(v != k for k, v in cc_star.items())  # non-trivial clusters exist
 
 
+
+def test_unread_observation_falls_back_to_counted_frontier(spark, sf_dir, monkeypatch):
+    """Each round reads its changed-row count from an Observation that
+    fires during the pin. When that non-blocking read comes back empty
+    (a Spark version that stops delivering metrics at checkpoint time),
+    the round counts the frontier instead, and the labels must equal the
+    observed path's on the star-edge fixture."""
+    import pyspark.sql
+    from pyspark.sql import Observation
+
+    from stockpy_spark.operators.dedup import minhash_lsh_star_edges
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    ids = docs.select("doc_id")
+    star = minhash_lsh_star_edges(docs, "text", "doc_id", num_hashes=12, bands=2)
+
+    def labels():
+        rows = connected_components(ids, star, "doc_id", "d1", "d2").collect()
+        return {r.doc_id: r.label for r in rows}
+
+    observed = labels()
+
+    reads = []
+
+    class _EmptyRead:
+        def isEmpty(self):
+            return True
+
+    class _UnreadJo:
+        def __init__(self, jo):
+            self._real = jo
+
+        def getOrEmpty(self):
+            reads.append(1)
+            return _EmptyRead()
+
+        def __getattr__(self, name):
+            return getattr(self._real, name)
+
+    class _UnreadObservation(Observation):
+        def _on(self, df, *exprs):
+            out = super()._on(df, *exprs)
+            self._jo = _UnreadJo(self._jo)
+            return out
+
+    monkeypatch.setattr(pyspark.sql, "Observation", _UnreadObservation)
+    counted = labels()
+    assert reads, "the round loop never read its Observation"
+    assert counted == observed
+    assert any(v != k for k, v in counted.items())
+
 def test_hot_lsh_bucket_collapses_to_one_representative(spark):
     """A boilerplate-heavy corpus puts most documents into ONE LSH bucket
     in every band. The star-edge components must keep one

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from stockpy_spark.registry_hive import (
+from stockpy_spark.registry.pipelines import (
     q_hive_incremental_cycle,
     q_hive_partition_counts,
     q_hive_prune_day,

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from stockpy_spark.registry_r13 import (
+from stockpy_spark.registry.pipelines import (
     q_pipeline_data_release,
     release_stage_frames,
 )
@@ -81,7 +81,7 @@ def test_release_funnel_is_monotone_after_admission(spark, sf_dir):
     """The funnel audit table: counts decrease monotonically through
     the admission chain (nb -> url -> minhash -> exact -> fuzzy ->
     cap), and the early stages preserve the corpus (clean == input)."""
-    from stockpy_spark.registry_r13 import q_pipeline_release_funnel
+    from stockpy_spark.registry.pipelines import q_pipeline_release_funnel
 
     rows = {r.stage: r.n_docs for r in q_pipeline_release_funnel(spark, sf_dir).collect()}
     assert rows["0_input"] == rows["1_clean"]  # transforms, not filters

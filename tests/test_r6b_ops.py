@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from stockpy_spark.operators.filters import robust_clip_outliers
 from stockpy_spark.operators.similarity import kmeans_assign
 from stockpy_spark.operators.textstats import bm25_topk
-from stockpy_spark.registry_r6b import (
+from stockpy_spark.registry.relational import (
     q_q2_min_cost_supplier,
     q_q11_important_parts,
 )

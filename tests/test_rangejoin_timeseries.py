@@ -1,7 +1,7 @@
 """Range-join, time-bucket-rollup, and WAV-codec tests (round 5).
 
 The correctness twin of each query lives under the DuckDB oracle
-(tools/check.py, registry_ts.py); these tests pin the pieces the oracle
+(tools/check.py, registry/timeseries.py); these tests pin the pieces the oracle
 cannot see: physical plan shape (the bucket decomposition must plan as
 a hash equi-join, never a BroadcastNestedLoopJoin), the exactly-once
 guarantee of the overlap join under adversarial bucket widths, the

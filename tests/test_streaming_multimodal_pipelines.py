@@ -767,7 +767,7 @@ def test_stream_events_handles_directory_layout(spark, tmp_path):
     """Regression: a Spark-written events DIRECTORY (vs the driver's
     single-file fixture) must stream real batches — the symlink-a-file
     assumption silently produced zero batches on directory tables."""
-    from stockpy_spark.registry_stream import _stream_events
+    from stockpy_spark.registry.streaming import _stream_events
     from stockpy_spark.sources.testdata import read_events
 
     sf_dir = str(tmp_path / "sf")
@@ -813,8 +813,8 @@ def test_tws_running_stats_batch_parity_or_documented_seam(spark, sf_dir):
             tws_running_stats(src, "user_id", "value", "ts")
         return
 
-    from stockpy_spark.registry_stream import q_stream_tws_stats
-    from stockpy_spark.registry_stream import q_stream_running_stats
+    from stockpy_spark.registry.streaming import q_stream_tws_stats
+    from stockpy_spark.registry.streaming import q_stream_running_stats
 
     got = {
         r.user_id: (r.n_events, r.sum_value, r.max_value)

@@ -37,6 +37,7 @@ from __future__ import annotations
 import hashlib
 import math
 import os
+import re
 import sys
 import time
 from datetime import date, datetime
@@ -136,16 +137,27 @@ def canon_rows(cols: list[str], rows: list[tuple]) -> tuple[str, int]:
     return h, len(rows)
 
 
+# Registration spellings, newest first: the ``@query("name", ...)``
+# decorator of stockpy_spark/registry/, then the two spellings older
+# revisions used -- dict-literal entries (``"name": (q_fn, SQL)``) and
+# subscript assignment (``QUERIES["name"] = (...)``).
+_KEY_PATTERNS = (
+    re.compile(r'^@query\(\s*"([a-z0-9_]+)"', re.M),
+    re.compile(r'^\s*"([a-z0-9_]+)"\s*:\s*\(', re.M),
+    re.compile(r'\[\s*"([a-z0-9_]+)"\s*\]\s*=\s*\(', re.M),
+)
+
+
+def keys_in_source(src: str) -> set[str]:
+    """Query names one registry source file declares, read textually."""
+    return {key for pat in _KEY_PATTERNS for key in pat.findall(src)}
+
+
 def keys_at_rev(rev: str) -> set[str]:
     """Registry query keys at a git revision, extracted textually from
-    the stockpy_spark/registry*.py sources — no import of old code
-    needed. Two registration spellings exist: dict-literal entries
-    (``"name": (q_fn, SQL_or_None)``) and subscript assignment
-    (``QUERIES["name"] = (...)``, used by two registry_stream
-    late-additions); the r16 fix matches both — the literal-only regex
-    made those two names look perpetually new, so every --new-since
-    run burned ~20 s re-checking queries that landed rounds ago."""
-    import re
+    the sources under stockpy_spark/registry (the package, or the
+    registry*.py files of older revisions) -- no import of old code
+    needed."""
     import subprocess
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -153,20 +165,15 @@ def keys_at_rev(rev: str) -> set[str]:
         ["git", "ls-tree", "-r", "--name-only", rev, "stockpy_spark/"],
         capture_output=True, text=True, cwd=repo, check=True,
     ).stdout.split()
-    pats = (
-        re.compile(r'^\s*"([a-z0-9_]+)"\s*:\s*\(', re.M),
-        re.compile(r'\[\s*"([a-z0-9_]+)"\s*\]\s*=\s*\(', re.M),
-    )
     keys: set[str] = set()
     for path in ls:
-        if "registry" not in os.path.basename(path):
+        if not path.startswith("stockpy_spark/registry"):
             continue
         src = subprocess.run(
             ["git", "show", f"{rev}:{path}"],
             capture_output=True, text=True, cwd=repo, check=True,
         ).stdout
-        for pat in pats:
-            keys.update(pat.findall(src))
+        keys |= keys_in_source(src)
     return keys
 
 

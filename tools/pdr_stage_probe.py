@@ -2,7 +2,7 @@
 item #4): the capstone is the headline's largest entry (~11 s at
 sf0.1) and one opaque number — a stage-level regression would hide
 inside it. This probe times each stage frame of
-registry_r13.release_stage_frames end-to-end (noop sink) in pipeline
+registry.pipelines.release_stage_frames end-to-end (noop sink) in pipeline
 order and records per-stage wall + shuffle-write deltas.
 
 Reading the numbers: the EAGER PINS (the cleaned-corpus boundary,
@@ -53,7 +53,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from stockpy_spark.registry import QUERIES
-    from stockpy_spark.registry_r13 import release_stage_frames
+    from stockpy_spark.registry.pipelines import release_stage_frames
 
     reader = StatusReader(spark)
     # warm scans + JVM (not timed)
@@ -67,11 +67,11 @@ def main() -> None:
     # mh_keep, c9, the fuzzy-decon minhash wide frame, c10) — shim the
     # module's pin reference so each materialization is timed
     # individually. Pin order is positional; names follow the source.
-    import stockpy_spark.registry_r13 as r13mod
+    import stockpy_spark.registry.pipelines as pipelines_mod
 
     pin_names = ["clean", "admitted6", "mh_keep", "c9", "fuzzy_wide", "c10"]
     pin_rows: list[dict] = []
-    real_pin = r13mod.pin
+    real_pin = pipelines_mod.pin
 
     def timed_pin(df):
         mark = reader.mark()
@@ -90,11 +90,11 @@ def main() -> None:
 
     mark = reader.mark()
     t0 = time.time()
-    r13mod.pin = timed_pin
+    pipelines_mod.pin = timed_pin
     try:
         frames = release_stage_frames(spark, sf_dir)
     finally:
-        r13mod.pin = real_pin
+        pipelines_mod.pin = real_pin
     build = {
         "wall_s": round(time.time() - t0, 2),
         "shuffle_mb": shuffle_mb(mark),
